@@ -3,8 +3,8 @@
 Everything here is plain numpy/pyarrow: the benchmark builds its inputs in
 its own process before the program sees them, and the program only receives
 the files. The same seed gives byte-identical files; the *shape* of the input
-(row counts, number and length multiset of gaps, duplicate shares) does not
-depend on the seed, so runs on different seeds do the same amount of work.
+(row counts, gap count and length ranges, duplicate shares) does not depend
+on the seed, so runs on different seeds do about the same amount of work.
 """
 
 from __future__ import annotations
@@ -33,6 +33,12 @@ CUM_COLS = [
 ]
 STATIONS = [260, 310, 344, 370]
 
+# per household: this many short (2-12 rows) and long (3 h-2 days) gaps;
+# per project: this many project-wide short outages
+SHORT_GAPS = 2
+LONG_GAPS = 1
+PROJECT_OUTAGES = 1
+
 
 @dataclasses.dataclass
 class EtdShape:
@@ -40,11 +46,6 @@ class EtdShape:
     houses_per_project: int
     days: int
     columns: int
-    # per household: this many short (2-12 rows) and long (3 h-2 days) gaps;
-    # per project: this many project-wide short outages
-    short_gaps: int = 2
-    long_gaps: int = 1
-    project_outages: int = 1
 
     @property
     def cum_cols(self) -> list[str]:
@@ -139,15 +140,15 @@ def generate_etd(root: str, seed: int, shape: EtdShape) -> EtdTruth:
     for pid, hids in houses_of.items():
         taken = np.zeros(steps, bool)
         outages = _place_gaps(
-            rng, steps, [int(x) for x in rng.integers(3, 13, shape.project_outages)], taken
+            rng, steps, [int(x) for x in rng.integers(3, 13, PROJECT_OUTAGES)], taken
         )
         for j, hid in enumerate(hids):
             mask = np.zeros(steps, bool)
             for s, length in outages:
                 mask[s : s + length] = True
             own = taken.copy()
-            lengths = [int(x) for x in rng.integers(2, 13, shape.short_gaps)]
-            lengths += [int(x) for x in rng.integers(36, 2 * STEPS_PER_DAY + 1, shape.long_gaps)]
+            lengths = [int(x) for x in rng.integers(2, 13, SHORT_GAPS)]
+            lengths += [int(x) for x in rng.integers(36, 2 * STEPS_PER_DAY + 1, LONG_GAPS)]
             if j == 0:
                 lead = int(rng.integers(12, STEPS_PER_DAY))
                 mask[:lead] = True
@@ -251,16 +252,16 @@ def generate_etd(root: str, seed: int, shape: EtdShape) -> EtdTruth:
 
 STOPWORDS = ["the", "and", "of", "to", "a", "is", "in", "that", "for", "it"]
 _LETTERS = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+WORDS = 150  # words per full-length document
+EXACT_SHARE = 0.08  # docs that are an exact copy of another doc
+NEAR_SHARE = 0.12  # docs that are a few-word edit of another doc
+SHORT_SHARE = 0.04  # docs that fail the quality gate (too short)
+EDITS = 3  # word substitutions per near duplicate
 
 
 @dataclasses.dataclass
 class CorpusShape:
     docs: int
-    words: int = 150
-    exact_share: float = 0.08  # docs that are an exact copy of another doc
-    near_share: float = 0.12  # docs that are a few-word edit of another doc
-    short_share: float = 0.04  # docs that fail the quality gate (too short)
-    edits: int = 3  # word substitutions per near duplicate
 
 
 @dataclasses.dataclass
@@ -277,7 +278,7 @@ def generate_corpus(path: str, seed: int, shape: CorpusShape) -> CorpusTruth:
     whitespace-separated lowercase pseudo-words mixed with English stopwords,
     so every full-length document passes the quality gate. Planted: exact
     duplicates (same words, case and spacing changed), near duplicates
-    (``edits`` word substitutions), and short documents the gate rejects."""
+    (``EDITS`` word substitutions), and short documents the gate rejects."""
     rng = np.random.default_rng(seed)
     vocab_n = 20_000
     lens = rng.integers(4, 9, vocab_n)
@@ -288,9 +289,9 @@ def generate_corpus(path: str, seed: int, shape: CorpusShape) -> CorpusTruth:
     )
     vocab = np.concatenate([np.array(STOPWORDS, dtype=object), vocab])
     n = shape.docs
-    n_exact = int(n * shape.exact_share)
-    n_near = int(n * shape.near_share)
-    n_short = int(n * shape.short_share)
+    n_exact = int(n * EXACT_SHARE)
+    n_near = int(n * NEAR_SHARE)
+    n_short = int(n * SHORT_SHARE)
     n_base = n - n_exact - n_near - n_short
 
     def words(count: int) -> np.ndarray:
@@ -300,14 +301,14 @@ def generate_corpus(path: str, seed: int, shape: CorpusShape) -> CorpusTruth:
         idx[stop] = rng.integers(0, len(STOPWORDS), int(stop.sum()))
         return vocab[idx]
 
-    docs: list[list[str] | str] = [list(words(shape.words)) for _ in range(n_base)]
+    docs: list[list[str] | str] = [list(words(WORDS)) for _ in range(n_base)]
     near_pairs: list[tuple[int, int]] = []
     exact_of: list[int] = []
     src_pool = rng.permutation(n_base)
     for k in range(n_near):
         src = int(src_pool[k])
         copy = list(docs[src])
-        for pos in rng.choice(shape.words, shape.edits, replace=False):
+        for pos in rng.choice(WORDS, EDITS, replace=False):
             copy[pos] = words(1)[0]
         near_pairs.append((src, len(docs)))
         docs.append(copy)

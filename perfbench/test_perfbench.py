@@ -119,7 +119,7 @@ def test_planted_gaps_cover_first_rows_and_gap_ends(etd_truth):
     for h, na in etd_truth.na_diff.items():
         assert na[0]
         # every household has short and long gaps, plus the outage
-        assert etd_truth.imputed_count(h) > ETD.short_gaps * 2 + 36
+        assert etd_truth.imputed_count(h) > gen.SHORT_GAPS * 2 + 36
         assert len(etd_truth.gap_free_days(h)) > 0
 
 

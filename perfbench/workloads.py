@@ -26,6 +26,10 @@ def _ts(day) -> str:
     return str(day.astype("datetime64[s]")).replace("T", " ")
 
 
+# input generations in setup; setup_s takes their median time
+GEN_REPS = 3
+
+
 def _timed(fn):
     t0 = time.perf_counter()
     out = fn()
@@ -43,18 +47,18 @@ class Workload:
         self.quality: dict[str, float] = {}
         self._n = 0
 
-    def generate(self, fn, reps: int = 3):
-        """Run the seeded generator ``reps`` times into fresh directories and
-        keep the median time (the inputs are identical by construction);
+    def generate(self, fn):
+        """Run the seeded generator ``GEN_REPS`` times into fresh directories
+        and keep the median time (the inputs are identical by construction);
         returns the last result."""
         out = None
-        for r in range(reps):
+        for r in range(GEN_REPS):
             path = os.path.join(self.work, f"input{r}")
             shutil.rmtree(path, ignore_errors=True)
             os.makedirs(path)
             t, out = _timed(lambda: fn(path))
             self.gen_s.append(t)
-            if r < reps - 1:
+            if r < GEN_REPS - 1:
                 shutil.rmtree(path)
         self.input_dir = path
         return out
@@ -286,6 +290,10 @@ class AnalystReads(Workload):
                     .select("ReadingDate", "Netuitwisseling", "ZonopwekBruto")
                 )
             layer = "sources.parquet"
+        with tr.span(layer, f"plan:{template}"):
+            # optimization and physical planning, whose result collect()
+            # reuses: the plan span is build time, the collect span exec time
+            q._jdf.queryExecution().executedPlan()
         with tr.span(layer, f"collect:{template}"):
             return [tuple(r) for r in q.collect()]
 
