@@ -90,7 +90,7 @@ def check_etl(out: dict, truth: EtdTruth, cum_cols: list[str]) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# analyst_reads
+# etl_month read mix: answers against DuckDB
 # ---------------------------------------------------------------------------
 
 def _same(a, b) -> bool:

@@ -95,9 +95,10 @@ class EtdTruth:
 def _place_gaps(rng, steps: int, lengths: list[int], taken: np.ndarray) -> list[tuple[int, int]]:
     """Place gaps of the given lengths at seeded positions that overlap no
     taken row and keep one observed row on each side (so each gap has a
-    reading before and after it)."""
+    reading before and after it). The longest gap is placed first, while
+    the series has the most room."""
     out = []
-    for length in lengths:
+    for length in sorted(lengths, reverse=True):
         for _ in range(1000):
             s = int(rng.integers(2, steps - length - 2))
             if not taken[s - 2 : s + length + 2].any():

@@ -6,9 +6,10 @@ Run from the root of a checkout. The runner sizes Spark for the machine it
 runs on (``local[nproc]``, a driver heap below physical RAM, spill and temp
 files inside the checkout) and leaves every other setting at the program's
 ``get_spark`` defaults. It generates the workload's input from the seed,
-runs the cold op, then warm ops until ``--seconds`` have passed, checks every
-op's output, and prints one JSON object as its last line of output:
-end-to-end metrics with ``--trace 0``, per-layer metrics with ``--trace 1``.
+runs the cold op, then warm ops until ``--seconds`` have passed (at least
+``MIN_WARM_OPS``), checks every op's output, and prints one JSON object as
+its last line of output: end-to-end metrics with ``--trace 0``, per-layer
+metrics with ``--trace 1``.
 See README.md in this directory.
 """
 
@@ -26,6 +27,10 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+
+# warm ops per run whatever --seconds says: the pass-rate metrics are
+# medians over them
+MIN_WARM_OPS = 2
 
 END_TO_END = {
     "setup_s": "s",
@@ -132,17 +137,7 @@ def sandbox_env(work: str) -> None:
 
 
 def pctl(values: list[float], q: int) -> float:
-    if len(values) == 1:
-        return values[0]
     return statistics.quantiles(values, n=100, method="inclusive")[q - 1]
-
-
-def rate(units: list[int], lat: list[float]) -> float:
-    """Units per second: per-op units over the median op time when every op
-    does the same work, else total units over total time."""
-    if len(set(units)) == 1:
-        return units[0] / statistics.median(lat)
-    return sum(units) / sum(lat)
 
 
 def stop_spark(spark) -> None:
@@ -201,33 +196,36 @@ def main() -> int:
         tracer.install()
         wl = workloads.WORKLOADS[args.workload](spark, work, args.seed, tracer)
         wl.setup()
-        setup_s = session_s + wl.setup_work_s
 
         tracer.phase = "cold"
-        cold = [wl.op() for _ in range(wl.ops_per_pass())]
-        cold_s = sum(t for t, _, _ in cold)
+        cold = wl.op()
+        setup_s = session_s + wl.setup_work_s
 
         tracer.phase = "timed"
         cpu0 = tree_cpu_s(jvm_pid)
-        lat, rows, docs = [], [], []
+        ops = []
         deadline = time.perf_counter() + args.seconds
-        while time.perf_counter() < deadline or len(lat) % wl.ops_per_pass() or not lat:
-            t, r, d = wl.op()
-            lat.append(t)
-            rows.append(r)
-            docs.append(d)
+        while len(ops) < MIN_WARM_OPS or time.perf_counter() < deadline:
+            ops.append(wl.op())
         cpu1 = tree_cpu_s(jvm_pid)
         rss = peak_rss_mb(jvm_pid)
         tracer.phase = "finish"
         wl.finish()
-        n = len(lat)
+        n = len(ops)
+        pass_s = statistics.median(op.seconds for op in ops)
+        # latency of the read queries where the workload runs them, else of
+        # the passes
+        lat = [q for op in ops for q in op.query_s] or [op.seconds for op in ops]
 
         if args.trace:
-            metrics = layer_metrics(tracer, wl, session_s, rss, n, cores, sum(rows))
+            metrics = layer_metrics(tracer, wl, session_s, rss, n, cores,
+                                    sum(op.returned for op in ops))
             os.makedirs(os.path.join(ROOT, ".perfbench_traces"), exist_ok=True)
             tracer.dump(
                 os.path.join(ROOT, ".perfbench_traces", f"{args.workload}-seed{args.seed}.json"),
-                {"workload": args.workload, "seed": args.seed, "op_ms": [t * 1e3 for t in lat],
+                {"workload": args.workload, "seed": args.seed,
+                 "pass_ms": [op.seconds * 1e3 for op in ops],
+                 "query_ms": [q * 1e3 for op in ops for q in op.query_s],
                  "metrics": metrics},
             )
             units = per_layer_units()
@@ -235,9 +233,9 @@ def main() -> int:
         else:
             values = {
                 "setup_s": setup_s,
-                "cold_pass_s": cold_s,
-                "rows_per_s": rate(rows, lat),
-                "docs_per_s": rate(docs, lat),
+                "cold_pass_s": cold.seconds,
+                "rows_per_s": ops[0].rows / pass_s,
+                "docs_per_s": ops[0].docs / pass_s,
                 "p50_ms": statistics.median(lat) * 1e3,
                 "p90_ms": pctl(lat, 90) * 1e3,
                 "cpu_s": (cpu1 - cpu0) / n,
@@ -246,11 +244,13 @@ def main() -> int:
         print(
             f"[{args.workload}] seed={args.seed} cores={cores} warm_ops={n} "
             f"session_s={session_s:.2f} gen_s={statistics.median(wl.gen_s):.3f} "
-            f"materialize_s={wl.materialize_s:.2f} cold_s={cold_s:.2f} "
+            f"prep_s={wl.prep_s:.2f} cold_s={cold.seconds:.2f} "
+            f"pass_s={[round(op.seconds, 2) for op in ops]} "
+            f"query_ms={[round(q * 1e3) for op in ops for q in op.query_s]} "
             f"quality={wl.quality}",
             file=sys.stderr,
         )
-        attempted = len(cold) + n
+        attempted = 1 + n
         failed = wl.op_failures
     finally:
         if spark is not None:
@@ -282,20 +282,32 @@ def layer_metrics(tracer, wl, session_s, rss_mb, n, cores, rows_returned) -> dic
         out[f"{layer}.slot_util"] = (
             m["task_ms"] / (m["exec_ms"] * cores) if m["exec_ms"] else 0.0
         )
-    scanned = sum(m["input_records"] for m in tot.values())
+    timed = [sp for sp in tracer.spans if sp.phase == "timed"]
+    # rows the read queries scanned: the jobs their collect() ran
+    scanned = sum(sp.counters.get("input_records", 0.0) for sp in timed
+                  if sp.name.startswith("collect:"))
     out["sources.parquet.rows_scanned_per_row_returned"] = (
-        scanned / rows_returned if wl.name == "analyst_reads" and rows_returned else 0.0
+        scanned / rows_returned if rows_returned else 0.0
     )
     out["operators.dedup.pair_precision"] = wl.quality.get("precision", 0.0)
     out["operators.dedup.near_dup_recall"] = wl.quality.get("recall", 0.0)
-    timed = [sp for sp in tracer.spans if sp.phase == "timed"]
-    inner = [sp for sp in timed if sp.layer != "op"]
-    # op wall time without the tracer's own bookkeeping inside it
-    wall = sum(sp.ms for sp in timed if sp.layer == "op") - sum(sp.book_ms for sp in inner)
     # the tracer's own calls only; the whole overhead of a traced run is its
     # op time minus an untraced run's on the same seed (see README.md)
     out["trace.bookkeeping_ms"] = sum(sp.book_ms for sp in timed) / n
-    out["trace.exec_share"] = sum(sp.self_ms for sp in inner if sp.kind == "exec") / wall
+    # the share of pass wall time (tracer calls excluded) inside exec spans;
+    # read cycles are left out, their plan spans are build time on purpose
+    by_id = {sp.id: sp for sp in tracer.spans}
+
+    def top(sp):
+        while sp.parent is not None:
+            sp = by_id[sp.parent]
+        return sp
+
+    in_pass = [sp for sp in timed if top(sp).name.endswith("_pass")]
+    wall = (sum(sp.ms for sp in in_pass if sp.parent is None)
+            - sum(sp.book_ms for sp in in_pass if sp.parent is not None))
+    out["trace.exec_share"] = sum(
+        sp.self_ms for sp in in_pass if sp.layer != "op" and sp.kind == "exec") / wall
     return out
 
 

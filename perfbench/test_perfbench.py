@@ -115,6 +115,13 @@ def test_etl_checker_rejects_corruption(etd_truth, corruption):
     assert checks.check_etl(out, etd_truth, ETD.cum_cols)
 
 
+def test_etd_generator_places_every_gap(tmp_path):
+    # the long gap goes first, so no seed runs out of room for it
+    for seed in range(100):
+        truth = gen.generate_etd(str(tmp_path), seed, ETD)
+        assert sum(len(truth.gap_free_days(h)) for h in truth.house_project) > 0
+
+
 def test_planted_gaps_cover_first_rows_and_gap_ends(etd_truth):
     for h, na in etd_truth.na_diff.items():
         assert na[0]
@@ -124,7 +131,7 @@ def test_planted_gaps_cover_first_rows_and_gap_ends(etd_truth):
 
 
 # ---------------------------------------------------------------------------
-# analyst_reads answer comparison
+# etl_month read mix: answer comparison
 
 def test_compare_rows():
     ts = pd.Timestamp("2023-01-02 01:00").to_pydatetime()
