@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import SWITCH_MULTIPLIER
 
 # KNMI perceived-temperature constants (reference knmi.py:80-98).
 HUMIDITY_COEFFICIENT = 0.33
@@ -66,12 +65,6 @@ def normalized_datetime(ts: Column, reference_monday: str = "2023-01-02") -> Col
     return F.timestamp_seconds(
         F.unix_timestamp(base) + day_offset.cast("long") * 86400 + seconds_into_day
     )
-
-
-def switch_multiplier(interval: str) -> float:
-    """kW <-> kWh conversion factor per interval (reference
-    calculated_columns.py:530-556)."""
-    return SWITCH_MULTIPLIER[interval]
 
 
 def qround(col: Column, n: int | None) -> Column:

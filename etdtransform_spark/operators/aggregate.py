@@ -94,11 +94,6 @@ def aggregate_project_data(
     return min_count_aggregate(df, group_cols, var_methods)
 
 
-def group_size(df: DataFrame, group_cols: list[str], alias: str = "n") -> DataFrame:
-    """Reference ``grouped.size()`` (aggregate.py:474-475)."""
-    return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias(alias))
-
-
 def filtered_percentile_bounds(
     df: DataFrame,
     group_cols: list[str],

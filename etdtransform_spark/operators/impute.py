@@ -141,9 +141,9 @@ def _impute_one_column(
     thresholds: dict[str, dict[str, float]],
 ) -> DataFrame:
     """Impute one cumulative column's Diff in-plan. Adds ``<Var>OldDiff``,
-    ``<Var>Diff_is_imputed``, ``<Var>Diff_impute_type`` and the per-column
-    bookkeeping columns ``_cvg_<Var>`` / ``_gap_length_<Var>`` used by the
-    gap-stats aggregation (dropped by the orchestrator afterwards)."""
+    ``<Var>Diff_is_imputed`` and ``<Var>Diff_impute_type``; the gap-group id
+    ``_cvg_<Var>``, the gap length ``_gap_length_<Var>`` and the other
+    temporaries are dropped before returning."""
     d, a = diff_col(cum_col), avg_col(cum_col)
     it_col, ii_col = impute_type_col(cum_col), is_imputed_col(cum_col)
     cvg = f"_cvg_{cum_col}"
@@ -311,8 +311,9 @@ def _impute_one_column(
 
     df = df.withColumn(d, F.col("_new_diff"))
     return df.drop(
-        "_gap_start", "_cve_prev", "_prev_seed", "_prev_cum", "_end_cum",
-        "_gap_jump", "_impute_values", "_impute_jump", "_house_factor", "_new_diff",
+        cvg, gap_len, "_gap_start", "_cve_prev", "_prev_seed", "_prev_cum",
+        "_end_cum", "_gap_jump", "_impute_values", "_impute_jump",
+        "_house_factor", "_new_diff",
     )
 
 
@@ -323,10 +324,9 @@ def impute_and_normalize(
     thresholds: dict[str, dict[str, float]] | None = None,
     avg_diffs: DataFrame | None = None,
     normalize_columns: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Full imputation: join project averages, impute every cumulative
-    column's Diff, rebuild the cumulative columns from imputed diffs, and
-    compute per-(project, house, column) gap statistics.
+    column's Diff and rebuild the cumulative columns from imputed diffs.
 
     ``normalize_columns`` is the set of cumulative columns rebuilt in the
     normalization stage; it defaults to ``cumulative_columns`` plus every
@@ -336,8 +336,10 @@ def impute_and_normalize(
     also rebuilt from their raw diffs (verified value-for-value by
     tests/test_reference_parity.py).
 
-    Returns ``(imputed_df, gap_stats_df)``. The whole per-column pipeline is
-    one lazy plan with a single exchange (see module docstring).
+    Returns the imputed DataFrame; its per-(project, house, column) gap
+    statistics are :func:`imputation_gap_stats` over it. The whole
+    per-column pipeline is one lazy plan with a single exchange (see module
+    docstring).
     Reference orchestration: vectorized_impute.py:112-273 + aggregate.py:199-211.
     """
     if cumulative_columns is None:
@@ -365,8 +367,6 @@ def impute_and_normalize(
     for cum_col in cumulative_columns:
         df = _impute_one_column(df, cum_col, project_id_column, thresholds)
 
-    gap_stats = imputation_gap_stats(df, cumulative_columns, project_id_column)
-
     # normalization (reference aggregate.py:199-211): Original := cumulative;
     # cumulative := cumsum(imputed Diff); Check := diff(new - original).
     house_w = Window.partitionBy("HuisIdBSV").orderBy("ReadingDate")
@@ -386,12 +386,7 @@ def impute_and_normalize(
         - F.lag(F.col(c) - F.col(original_col(c))).over(house_w)
         for c in normalize_columns
     }
-    df = df.withColumns(check_cols)
-
-    bookkeeping = [f"_cvg_{c}" for c in cumulative_columns] + [
-        f"_gap_length_{c}" for c in cumulative_columns
-    ]
-    return df.drop(*bookkeeping), gap_stats
+    return df.withColumns(check_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -406,16 +401,24 @@ def imputation_gap_stats(
     """Per (project, house, diff column): totals, deviation from the
     cumulative min-max difference, gap/imputed counts, and the distinct
     method list + bitmask. One wide aggregate, then an explode to long form
-    (one shuffle; the reference does a groupby().apply per column)."""
+    (one shuffle; the reference does a groupby().apply per column).
+
+    ``df`` is the output of :func:`impute_and_normalize` — in the pipeline,
+    the written ``household_imputed`` family — and only its columns are
+    read: a gap row is one whose ``<Var>OldDiff`` (the pre-imputation Diff)
+    is NULL, the min-max runs over ``<Var>Original`` (the cumulative column
+    before normalization), and ``<Var>Diff`` / ``<Var>Diff_impute_type``
+    are the imputed values as written."""
     per_col_structs = []
     for cum_col in cumulative_columns:
         d, it = diff_col(cum_col), impute_type_col(cum_col)
-        cvg, gl = f"_cvg_{cum_col}", f"_gap_length_{cum_col}"
+        orig = F.col(original_col(cum_col))
+        in_gap = F.col(old_diff_col(cum_col)).isNull()
         # pandas .sum() over an all-NA group is 0.0, not NA
         # (vectorized_impute.py:168 diff_column_total) — parity-pinned by
         # tests/test_reference_parity.py on an all-NA household column
         diff_total = F.coalesce(F.sum(F.col(d)), F.lit(0.0))
-        minmax = F.max(F.col(cum_col)) - F.min(F.col(cum_col))
+        minmax = F.max(orig) - F.min(orig)
         methods = F.array_sort(
             F.array_distinct(F.collect_list(F.col(it)))
         )
@@ -425,7 +428,7 @@ def imputation_gap_stats(
                 diff_total.alias("diff_col_total"),
                 minmax.alias("cum_col_min_max_diff"),
                 (diff_total - minmax).alias("deviation"),
-                F.count(F.col(gl)).alias("missing"),
+                F.count(F.when(in_gap, F.lit(1))).alias("missing"),
                 methods.alias("methods"),
                 # reference semantics (vectorized_impute.py:176): every row
                 # with an impute_type counts as imputed — threshold clamps
@@ -436,9 +439,8 @@ def imputation_gap_stats(
                 # (impute.py:177-178) and goes NEGATIVE when clamps fire
                 # outside gaps — a documented §2.10 defect disposition; the
                 # exact reconciliation is asserted by test_reference_parity
-                (
-                    F.count(F.col(cvg))
-                    - F.count(F.when(F.col(cvg).isNotNull(), F.col(it)))
+                F.count(
+                    F.when(in_gap & F.col(it).isNull(), F.lit(1))
                 ).alias("imputed_na"),
                 F.coalesce(
                     F.bit_or(F.col(it)), F.lit(0)

@@ -1,5 +1,5 @@
-"""Ordered / window operators: lag-diff, grouped cumsum, forward-fill,
-count-gated rolling means, rank / top-k flags.
+"""Ordered / window operators: lag-diff, forward-fill, count-gated rolling
+means, rank / top-k flags.
 
 These are the reference engine's core primitives (SURVEY §2.5). Every ordered
 op partitions by the household (or station) key — gap/cumsum semantics must
@@ -26,26 +26,12 @@ def lag_diff(col: Column | str, w: WindowSpec) -> Column:
     return c - F.lag(c).over(w)
 
 
-def running_sum(col: Column | str, w: WindowSpec) -> Column:
-    """Grouped cumulative sum (reference aggregate.py:201-211, 602-656).
-    Null inputs contribute nothing but do not reset the running total."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-
 def forward_fill(col: Column | str, w: WindowSpec) -> Column:
     """Last non-null value at or before the current row (pandas ``ffill``
     within group; reference vectorized_impute.py:409,501-505)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.last(c, ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-
-
-def backward_fill(col: Column | str, w: WindowSpec) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.first(c, ignorenulls=True).over(
-        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
 
 

@@ -29,6 +29,7 @@ from ..operators.impute import (
     calculate_average_diff,
     household_diff_max_bounds,
     impute_and_normalize,
+    imputation_gap_stats,
     imputation_summaries,
 )
 from ..operators.resample import resample
@@ -51,21 +52,25 @@ def run_pipeline(
     structural: a family whose sink already holds a committed write (Spark's
     ``_SUCCESS`` marker) is read back instead of recomputed, so an
     interrupted run resumes from its last completed stage. A half-written
-    sink has no marker and is safely overwritten."""
+    sink has no marker and is safely overwritten. Every family takes the
+    same write-or-skip path; ``impute_gap_stats`` is derived from the
+    written ``household_imputed`` family, so a missing gap-stats marker
+    rebuilds only that family and does not re-impute."""
     os.makedirs(output_folder, exist_ok=True)
 
-    def materialize(key, base_name, build, interval=None, partition_by=None):
+    def materialize(name, build, interval=None, partition_by=None):
         """Write-or-skip one family; ``build`` is lazy so a skipped stage
         never constructs its plan."""
-        path = family_path(output_folder, base_name, interval)
+        key = name if interval is None else f"{name}_{interval}"
+        path = family_path(output_folder, name, interval)
         if skip_existing and os.path.exists(os.path.join(path, "_SUCCESS")):
             written[key] = path
         else:
             written[key] = write_family(
-                build(), output_folder, base_name,
+                build(), output_folder, name,
                 interval=interval, partition_by=partition_by,
             )
-        return read_family(spark, output_folder, base_name, interval=interval)
+        return read_family(spark, output_folder, name, interval=interval)
     cum_cols = cumulative_columns or [
         c for c in IMPUTE_CUMULATIVE_COLUMNS if c in household_df.columns
     ]
@@ -84,48 +89,37 @@ def run_pipeline(
     written: dict[str, str] = {}
 
     household_df = materialize(
-        "household_default", "household_default", lambda: household_df,
+        "household_default", lambda: household_df,
         partition_by=["ProjectIdBSV"],
     )
 
     # stage: avg-diff preparation (impute.py:469-537)
     bounds = materialize(
-        "household_diff_max_bounds", "household_diff_max_bounds",
+        "household_diff_max_bounds",
         lambda: household_diff_max_bounds(household_df, diff_cols),
     )
     avg_diffs = materialize(
-        "avg_diffs", "avg_diffs",
+        "avg_diffs",
         lambda: calculate_average_diff(household_df, diff_cols, max_bounds=bounds),
     )
 
-    # stage: imputation + normalization (impute.py:564-768)
-    impute_path = family_path(output_folder, "household_imputed")
-    gap_path = family_path(output_folder, "impute_gap_stats")
-    if skip_existing and all(
-        os.path.exists(os.path.join(p, "_SUCCESS"))
-        for p in (impute_path, gap_path)
-    ):
-        written["household_imputed"] = impute_path
-        written["impute_gap_stats"] = gap_path
-    else:
-        imputed_new, gap_stats_new = impute_and_normalize(
-            household_df, cum_cols, avg_diffs=avg_diffs
-        )
-        written["household_imputed"] = write_family(
-            imputed_new, output_folder, "household_imputed",
-            partition_by=["ProjectIdBSV"],
-        )
-        written["impute_gap_stats"] = write_family(
-            gap_stats_new, output_folder, "impute_gap_stats"
-        )
-    imputed = read_family(spark, output_folder, "household_imputed")
-    gap_stats = read_family(spark, output_folder, "impute_gap_stats")
+    # stage: imputation + normalization (impute.py:564-768); the gap stats
+    # are an aggregate over the written imputed family
+    # (vectorized_impute.py:168-188)
+    imputed = materialize(
+        "household_imputed",
+        lambda: impute_and_normalize(household_df, cum_cols, avg_diffs=avg_diffs),
+        partition_by=["ProjectIdBSV"],
+    )
+    gap_stats = materialize(
+        "impute_gap_stats", lambda: imputation_gap_stats(imputed, cum_cols)
+    )
     materialize(
-        "impute_summary_household", "impute_summary_household",
+        "impute_summary_household",
         lambda: imputation_summaries(gap_stats, imputed)[0],
     )
     materialize(
-        "impute_summary_project", "impute_summary_project",
+        "impute_summary_project",
         lambda: imputation_summaries(gap_stats, imputed)[1],
     )
 
@@ -133,7 +127,7 @@ def run_pipeline(
     from pyspark.sql import functions as F
 
     materialize(
-        "household_aggregated_diff", "household_aggregated_diff",
+        "household_aggregated_diff",
         lambda: imputed.groupBy("ProjectIdBSV", "ReadingDate").agg(
             *[F.avg(c).alias(c) for c in all_diff_cols]
         ),
@@ -141,7 +135,7 @@ def run_pipeline(
 
     # stage: calculated columns (calculated_columns.py:9-139)
     calculated = materialize(
-        "household_calculated", "household_calculated",
+        "household_calculated",
         lambda: add_calculated_columns(imputed),
         partition_by=["ProjectIdBSV"],
     )
@@ -149,11 +143,10 @@ def run_pipeline(
     # stage: resample matrix + project aggregation (aggregate.py:356-539)
     for iv in ivs:
         hh_iv = materialize(
-            f"household_{iv}", "household",
-            lambda iv=iv: resample(calculated, iv), interval=iv,
+            "household", lambda iv=iv: resample(calculated, iv), interval=iv,
         )
         materialize(
-            f"project_{iv}", "project",
+            "project",
             lambda hh_iv=hh_iv: aggregate_project_data(hh_iv), interval=iv,
         )
     return written

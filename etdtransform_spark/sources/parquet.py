@@ -74,7 +74,7 @@ def read_table(
 
 
 def _read_with_nanos_repair(
-    spark: SparkSession, sniff_path: str, read_path: str
+    spark: SparkSession, sniff_path: str, read_path: str | list[str]
 ) -> DataFrame:
     """Shared nanos-repair scan: footer-sniff ``sniff_path`` (one
     representative file/dir — footer inspection needs a LOCAL path, which
@@ -82,12 +82,14 @@ def _read_with_nanos_repair(
     the runtime conf (required or the scan raises PARQUET_TYPE_ILLEGAL;
     session-global and deliberately left set — the repo rule is that
     every nanos-capable read goes through this helper, never a bare
-    ``spark.read.parquet``), scan ``read_path`` (may be a glob), repair.
+    ``spark.read.parquet``), scan ``read_path`` (a path, a glob or a list
+    of files), repair.
     """
     ns_cols = _nanos_timestamp_columns(sniff_path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(read_path)
+    paths = read_path if isinstance(read_path, list) else [read_path]
+    df = spark.read.parquet(*paths)
     for c in ns_cols:
         # apply the repair only when Spark actually surfaced raw long
         # nanoseconds: INT96 timestamps (Spark's default writer output)
@@ -180,23 +182,35 @@ def combine_household_files(
 
     The reference loops files and stamps ProjectIdBSV/HuisIdBSV literals per
     file; here the id is recovered from the file path with
-    ``input_file_name`` (one glob scan, no driver-side loop) and the project
-    id joined from the (broadcast) index. Households with Meenemen=false are
-    excluded (aggregate.py:95-99).
+    ``input_file_name`` (one scan of the matched files, no driver-side loop)
+    and the project id joined from the (broadcast) index. Households with
+    Meenemen=false are excluded (aggregate.py:95-99).
 
     Mapped files are written by etdmap's pandas/pyarrow stage, whose default
     timestamp encoding is TIMESTAMP(NANOS) — illegal for a bare Spark scan.
     One representative footer is sniffed (the mapping stage writes every
     household with the same schema) and the ``read_table`` nanos repair is
-    applied to the whole glob scan.
+    applied to the whole scan.
+
+    A local folder is scanned as the sorted list of files matching
+    ``pattern``: handing Spark the glob itself makes its metadata-directory
+    probe log a ``FileNotFoundException`` stack trace on every call. A local
+    folder with no match raises ``FileNotFoundError``.
     """
     import glob as globmod
 
     glob = os.path.join(mapped_folder, pattern)
     # the mapping stage writes every household with the same schema, so
-    # ONE representative footer decides the repair for the whole glob scan
+    # ONE representative footer decides the repair for the whole scan
     matches = sorted(globmod.glob(glob))
-    if not matches and "://" in mapped_folder:
+    if matches:
+        raw = _read_with_nanos_repair(spark, matches[0], matches)
+    elif "://" not in mapped_folder:
+        raise FileNotFoundError(
+            f"combine_household_files: no files match {pattern!r} in "
+            f"{mapped_folder!r}"
+        )
+    else:
         # The footer sniff is local-filesystem only: on an HDFS/S3 URI the
         # glob is empty, pyarrow can't open the URI, the repair silently
         # no-ops, and the scan would later fail with a bare
@@ -210,7 +224,7 @@ def combine_household_files(
             f"PARQUET_TYPE_ILLEGAL, stage one representative file locally.",
             stacklevel=2,
         )
-    raw = _read_with_nanos_repair(spark, matches[0] if matches else glob, glob)
+        raw = _read_with_nanos_repair(spark, glob, glob)
     raw = raw.withColumn(
         "HuisIdBSV",
         F.regexp_extract(F.input_file_name(), r"household_(\d+)_table\.parquet", 1).cast(

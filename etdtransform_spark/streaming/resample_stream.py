@@ -61,18 +61,3 @@ def streaming_resample(
         .drop("_w")
         .select(*group_cols, reading_date, *variables.keys())
     )
-
-
-def read_household_stream(
-    spark,
-    path: str,
-    schema,
-    max_files_per_trigger: int = 8,
-) -> DataFrame:
-    """File-source stream over a household Parquet directory — the incremental
-    ingestion mode for continuously arriving meter files."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )

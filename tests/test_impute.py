@@ -12,7 +12,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etdtransform_spark.operators.impute import ImputeType, impute_and_normalize
+from etdtransform_spark.operators.impute import (
+    ImputeType,
+    impute_and_normalize,
+    imputation_gap_stats,
+)
 
 T0 = dt.datetime(2023, 1, 1, 0, 0, 0)
 TS = [T0 + dt.timedelta(minutes=5 * i) for i in range(6)]
@@ -77,9 +81,10 @@ def imputed(spark):
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
     df = df.drop("_avg")
-    out, gap_stats = impute_and_normalize(
+    out = impute_and_normalize(
         df, cumulative_columns=["X"], thresholds={}, avg_diffs=avg_diffs
     )
+    gap_stats = imputation_gap_stats(out, ["X"])
     data = {
         (r["HuisIdBSV"], r["ReadingDate"]): r for r in out.collect()
     }
@@ -145,7 +150,7 @@ def test_threshold_clamp(spark):
     avg_diffs = df.select(
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
-    out, _ = impute_and_normalize(
+    out = impute_and_normalize(
         df.drop("_avg"),
         cumulative_columns=["X"],
         thresholds={"XDiff": {"Min": 0.0, "Max": 2.0}},
@@ -174,10 +179,11 @@ def test_mid_gap_cumulative_value_splits_group(spark):
     avg_diffs = df.select(
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
-    out, stats = impute_and_normalize(
+    out = impute_and_normalize(
         df.drop("_avg"), cumulative_columns=["X"], thresholds={},
         avg_diffs=avg_diffs,
     )
+    stats = imputation_gap_stats(out, ["X"]).collect()
     got = {r["ReadingDate"]: r for r in out.collect()}
     # group 1 = rows 2,3 (end_cum=4, prev=2, jump=2, linear 1.0);
     # group 2 = rows 4,5 (end_cum=6, prev=4 via lag of row 3, jump=2, linear 1.0)
@@ -186,6 +192,16 @@ def test_mid_gap_cumulative_value_splits_group(spark):
     assert got[TS[4]]["XDiff"] == pytest.approx(1.0)
     assert got[TS[5]]["XDiff"] == pytest.approx(1.0)
     assert got[TS[2]]["XDiff_impute_type"] == int(ImputeType.LINEAR_FILL)
+    # both groups count as one household's gap rows: 4 missing, 4 linear
+    # fills; diffs 1+1 plus 4 x 1.0, cumulative min-max 6 - 1
+    (s,) = stats
+    assert s["missing"] == 4
+    assert s["imputed"] == 4
+    assert s["imputed_na"] == 0
+    assert list(s["methods"]) == [int(ImputeType.LINEAR_FILL)]
+    assert s["bitwise_methods"] == int(ImputeType.LINEAR_FILL)
+    assert s["diff_col_total"] == pytest.approx(6.0)
+    assert s["cum_col_min_max_diff"] == pytest.approx(5.0)
 
 
 def test_validate_household_columns_flags(spark):
@@ -229,8 +245,6 @@ def test_gap_stats_threshold_outside_gap_semantics(spark):
     defect; the exact reconciliation is pinned by test_reference_parity)."""
     import datetime as dt
 
-    from etdtransform_spark.operators.impute import impute_and_normalize
-
     t0 = dt.datetime(2023, 1, 1)
     ts = [t0 + dt.timedelta(minutes=5 * i) for i in range(6)]
     # 3-row gap (rows 2-4) + one non-gap diff of 6.0 (> threshold Max 2.0)
@@ -245,10 +259,11 @@ def test_gap_stats_threshold_outside_gap_semantics(spark):
         "`Zon-opwekTotaal` double, `Zon-opwekTotaalDiff` double, "
         "`Zon-opwekTotaalDiff_avg` double",
     )
-    _imputed, gap_stats = impute_and_normalize(
+    imputed = impute_and_normalize(
         df.drop("Zon-opwekTotaalDiff_avg"),
         cumulative_columns=["Zon-opwekTotaal"],
     )
+    gap_stats = imputation_gap_stats(imputed, ["Zon-opwekTotaal"])
     s = gap_stats.collect()[0]
     assert s.missing == 3
     assert s.imputed == 4          # 3 gap rows + the clamped non-gap row

@@ -186,11 +186,15 @@ def test_summaries(spark, pipeline_out):
     assert sp.filter(F.col("percentage_imputed") > 100).count() == 0
 
 
-def test_pipeline_skip_existing_resumes_without_rewrite(spark, pipeline_out):
+@pytest.mark.parametrize("invalidated", ["project_24h", "impute_gap_stats"])
+def test_pipeline_skip_existing_resumes_without_rewrite(
+    spark, pipeline_out, invalidated
+):
     """skip_existing=True on a completed output folder must not rewrite any
     family (the reference's sorted=/diffs_calculated= skip flags, made
     structural via _SUCCESS markers) — and removing one family's marker
-    recomputes exactly that family."""
+    recomputes exactly that family. ``impute_gap_stats`` is derived from the
+    written ``household_imputed``, so losing its marker must not re-impute."""
     import os
     import time
 
@@ -212,16 +216,16 @@ def test_pipeline_skip_existing_resumes_without_rewrite(spark, pipeline_out):
     assert written2 == written
     for k, p in written2.items():
         assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == marks[k], k
-    # invalidate ONE downstream family -> only it is rebuilt
-    target = written["project_24h"]
+    # invalidate ONE family -> only it is rebuilt
+    target = written[invalidated]
     os.remove(os.path.join(target, "_SUCCESS"))
     written3 = run_pipeline(
         spark, dummy, out_dir, cumulative_columns=CUM_COLS,
         intervals=["15min", "60min", "24h"], skip_existing=True,
     )
-    assert os.path.getmtime(os.path.join(target, "_SUCCESS")) > marks["project_24h"]
+    assert os.path.getmtime(os.path.join(target, "_SUCCESS")) > marks[invalidated]
     for k, p in written3.items():
-        if k != "project_24h":
+        if k != invalidated:
             assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == marks[k], k
     rows_after = {k: spark.read.parquet(p).count() for k, p in written3.items()}
     assert rows_after == rows_before
