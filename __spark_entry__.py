@@ -1485,7 +1485,7 @@ GROUP BY 1, 2
 
 # ---------------------------------------------------------------------------
 # §2.8 the full imputation rule chain — runs the REAL operator
-# (operators.impute._impute_one_column: 7 rules + threshold clamp) on an
+# (operators.impute.impute_columns: 7 rules + threshold clamp) on an
 # ETD-shaped frame synthesized from events, verified against a full SQL twin.
 # ---------------------------------------------------------------------------
 
@@ -1552,12 +1552,10 @@ def _etd_household_series(
 def q_impute_rule_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All ImputeType rules in one query (synthesis: _etd_household_series).
     Threshold Max=300 exercises the clamp."""
-    from etdtransform_spark.operators.impute import _impute_one_column
+    from etdtransform_spark.operators.impute import impute_columns
 
     base = _etd_household_series(_t(spark, sf_dir, "events"))
-    out = _impute_one_column(
-        base, "V", "ProjectIdBSV", {"VDiff": {"Min": 0.0, "Max": 300.0}}
-    )
+    out = impute_columns(base, ["V"], {"VDiff": {"Min": 0.0, "Max": 300.0}})
     return out.select(
         "event_id",
         F.col("HuisIdBSV").alias("user_id"),
@@ -13474,8 +13472,8 @@ FROM cnt, top1, top2, pagg, tagg, aflag, afl2
 def q_etd_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's own end-to-end spine as the fifth composite
     contract: household series (the q_impute_rule_chain synthesis, but
-    with 4 projects) → _impute_one_column (rules 1-7 + threshold clamp,
-    impute.py:137) → add_calculated_columns (the real coalesce-0
+    with 4 projects) → impute_columns (rules 1-7 + threshold clamp,
+    impute.py) → add_calculated_columns (the real coalesce-0
     energy-balance operator, calculated.py:15, via registry renames:
     VDiff→NetgebruikHoog, VOldDiff→TerugleveringHoog, VDiff_avg→Zonopwek)
     → resample 60min with an explicit min-count gate (resample.py:27;
@@ -13487,13 +13485,11 @@ def q_etd_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan audit: PLANS.md "etd_pipeline_e2e"."""
     from etdtransform_spark.operators.aggregate import min_count_aggregate
     from etdtransform_spark.operators.calculated import add_calculated_columns
-    from etdtransform_spark.operators.impute import _impute_one_column
+    from etdtransform_spark.operators.impute import impute_columns
     from etdtransform_spark.operators.resample import resample
 
     base = _etd_household_series(_t(spark, sf_dir, "events"), project_mod=4)
-    imp = _impute_one_column(
-        base, "V", "ProjectIdBSV", {"VDiff": {"Min": 0.0, "Max": 300.0}}
-    )
+    imp = impute_columns(base, ["V"], {"VDiff": {"Min": 0.0, "Max": 300.0}})
     # STAGE BOUNDARY: the imputed frame feeds TWO consumers (telemetry
     # rollup + the calculated/resample/aggregate chain) — without a
     # materialization each would re-run the full gap-stats window stack

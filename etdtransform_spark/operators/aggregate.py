@@ -93,26 +93,3 @@ def aggregate_project_data(
                    for v in variables}
     return min_count_aggregate(df, group_cols, var_methods)
 
-
-def filtered_percentile_bounds(
-    df: DataFrame,
-    group_cols: list[str],
-    value_cols: list[str],
-    p: float = 0.95,
-    lower_threshold: float = 1e-8,
-    bound_multiplier: float = 2.0,
-) -> DataFrame:
-    """Per group: exact p-quantile of each value column over values strictly
-    above ``lower_threshold`` (NULL if no such values), doubled into an outlier
-    upper bound. Reference impute.py:55-90 (``calculate_average_diff``).
-
-    Exact ``percentile`` (not ``percentile_approx``) — required to hash-match
-    the oracle, and the per-group input (house maxima) is tiny.
-    """
-    exprs = []
-    for c in value_cols:
-        gated = F.when(F.col(c) > lower_threshold, F.col(c))
-        q = F.percentile(gated, F.lit(p))
-        exprs.append(q.alias(f"{c}_p{int(p * 100)}"))
-        exprs.append((q * bound_multiplier).alias(f"{c}_upper_bound"))
-    return df.groupBy(*group_cols).agg(*exprs)

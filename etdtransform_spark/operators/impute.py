@@ -15,8 +15,15 @@ structural). All subsequent per-gap-group windows partition by
 ``(HuisIdBSV, <group col>)`` — Spark's ClusteredDistribution is satisfied by
 the existing hash(HuisIdBSV) partitioning, so the whole multi-column engine
 costs ONE exchange of the fact table regardless of how many cumulative
-columns are processed. Per-(project, timestamp) averages and per-project
-bounds are separate small aggregates broadcast-joined back.
+columns are processed. Per-(project, timestamp) averages are a small
+aggregate broadcast-joined back; per-project bounds a window over house maxima.
+
+The imputation is six ``withColumns`` projections that all imputed columns
+share (:func:`impute_columns`): (1) gap starts, the previous
+cumulative-encountered flag, impute values and the house factor; (2) the
+gap-group id; (3) the group windows; (4) the previous cumulative value; (5)
+the rule chain; (6) the clamp and the outputs. Spark analyses the plan six
+times per pass, not ~20 times per column as for a ``withColumn`` chain.
 """
 
 from __future__ import annotations
@@ -72,24 +79,20 @@ def household_diff_max_bounds(
     Reference impute.py:55-90. Output: one row per household with
     ``<col>_huis_max`` and ``<col>_upper_bound`` columns.
     """
-    # NOTE: config.huis_max_col/upper_bound_col take the CUMULATIVE name and
-    # append "Diff"; inputs here are already diff columns, so the suffixes
-    # are spelled directly. Same gated-percentile shape as
-    # aggregate.filtered_percentile_bounds (both implement reference
-    # impute.py:55-90); kept inline for the <c>_huis_max naming contract.
+    # config.huis_max_col/upper_bound_col take the CUMULATIVE name and append
+    # "Diff"; inputs here are already diff columns, so the suffixes are
+    # spelled directly.
     house_max = df.groupBy(project_id_column, "HuisIdBSV").agg(
         *[F.max(c).alias(f"{c}_huis_max") for c in diff_columns]
     )
-    bound_exprs = []
-    for c in diff_columns:
-        hm = F.col(f"{c}_huis_max")
-        gated = F.when(hm > EPS, hm)
-        bound_exprs.append(
-            (F.percentile(gated, F.lit(0.95)) * 2.0).alias(f"{c}_upper_bound")
-        )
-    # bounds is one row per PROJECT (dimension-sized at any SF) -> broadcast
-    bounds = house_max.groupBy(project_id_column).agg(*bound_exprs)
-    return house_max.join(F.broadcast(bounds), project_id_column, "left")
+    # the bound is a window over the project's house maxima: one exchange of
+    # the maxima, not a second groupBy broadcast and joined back (5 jobs -> 3)
+    project_w = Window.partitionBy(project_id_column)
+    maxima = [F.col(f"{c}_huis_max") for c in diff_columns]
+    return house_max.select("*", *[
+        (F.percentile(F.when(hm > EPS, hm), F.lit(0.95)).over(project_w) * 2.0)
+        .alias(f"{c}_upper_bound") for c, hm in zip(diff_columns, maxima)
+    ])
 
 
 def calculate_average_diff(
@@ -134,88 +137,38 @@ def calculate_average_diff(
 # Stage 2: per-column gap grouping + rules (reference vectorized_impute.py)
 # ---------------------------------------------------------------------------
 
-def _impute_one_column(
-    df: DataFrame,
-    cum_col: str,
-    project_id_column: str,
-    thresholds: dict[str, dict[str, float]],
-) -> DataFrame:
-    """Impute one cumulative column's Diff in-plan. Adds ``<Var>OldDiff``,
-    ``<Var>Diff_is_imputed`` and ``<Var>Diff_impute_type``; the gap-group id
-    ``_cvg_<Var>``, the gap length ``_gap_length_<Var>`` and the other
-    temporaries are dropped before returning."""
+def _impute_stages(
+    cum_col: str, thresholds: dict[str, dict[str, float]]
+) -> tuple[list[dict[str, Column]], list[str]]:
+    """One cumulative column's share of the six stages of
+    :func:`impute_columns`, and the names of its temporaries. A stage reads
+    only the input and the columns that earlier stages added."""
     d, a = diff_col(cum_col), avg_col(cum_col)
     it_col, ii_col = impute_type_col(cum_col), is_imputed_col(cum_col)
-    cvg = f"_cvg_{cum_col}"
-    gap_len = f"_gap_length_{cum_col}"
+    t = {k: f"_{k}_{cum_col}" for k in (
+        "gap_start cve_prev impute_values house_factor cvg gap_length "
+        "prev_seed end_cum impute_jump prev_cum new_diff"
+    ).split()}
+    c = {k: F.col(v) for k, v in t.items()}
 
     house_w = Window.partitionBy("HuisIdBSV").orderBy("ReadingDate")
     house_all = Window.partitionBy("HuisIdBSV")
-
+    group_w = Window.partitionBy("HuisIdBSV", t["cvg"])
+    group_full = group_w.orderBy("ReadingDate").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
     is_na = F.col(d).isNull()
+    in_gap = c["cvg"].isNotNull()
+
     # gap_start: first NA row of a run (house boundaries handled by the
     # window partitioning; reference vectorized_impute.py:388-392).
-    prev_is_na = F.lag(is_na).over(house_w)
-    gap_start = is_na & ~F.coalesce(prev_is_na, F.lit(False))
-
+    gap_start = is_na & ~F.coalesce(F.lag(is_na).over(house_w), F.lit(False))
     # cumulative_value_group: gap groups split where the cumulative column has
     # a non-NA value mid-gap (vectorized_impute.py:401-419). The group id is a
     # running count of starts; NULL on non-gap rows.
     cum_value_encountered = F.col(cum_col).isNotNull() & is_na
-    df = df.withColumn("_gap_start", gap_start).withColumn(
-        "_cve_prev", F.coalesce(F.lag(cum_value_encountered).over(house_w), F.lit(False))
-    )
-    group_seed = (F.col("_cve_prev") | F.col("_gap_start")).cast("long")
-    running_group = F.sum(group_seed).over(
+    running_group = F.sum((c["cve_prev"] | c["gap_start"]).cast("long")).over(
         house_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn(cvg, F.when(is_na, running_group))
-
-    group_w = Window.partitionBy("HuisIdBSV", cvg)
-    group_ordered = group_w.orderBy("ReadingDate")
-    group_full = group_ordered.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-
-    df = df.withColumn(
-        gap_len, F.when(F.col(cvg).isNotNull(), F.count(F.lit(1)).over(group_w))
-    )
-
-    # prev_cum_value: the cumulative value on the row just before the gap
-    # (negative -> NULL), broadcast to the whole group
-    # (vectorized_impute.py:481-505).
-    prev_raw = F.lag(F.col(cum_col)).over(house_w)
-    first_in_group = F.col(cvg).isNotNull() & (
-        F.coalesce(F.lag(F.col(cvg)).over(house_w), F.lit(-1)) != F.col(cvg)
-    )
-    prev_seed = F.when(first_in_group & (prev_raw >= 0), prev_raw)
-    df = df.withColumn("_prev_seed", prev_seed)
-    df = df.withColumn(
-        "_prev_cum",
-        F.when(
-            F.col(cvg).isNotNull(),
-            F.first(F.col("_prev_seed"), ignorenulls=True).over(group_full),
-        ),
-    )
-
-    # end_cum_value: last non-NA cumulative value inside the group
-    # (negative -> NULL) (vectorized_impute.py:611-614).
-    end_raw = F.when(
-        F.col(cvg).isNotNull(),
-        F.last(F.col(cum_col), ignorenulls=True).over(group_full),
-    )
-    df = df.withColumn("_end_cum", F.when(end_raw >= 0, end_raw))
-
-    gap_jump = F.col("_end_cum") - F.col("_prev_cum")
-    df = df.withColumn("_gap_jump", gap_jump)
-
-    # impute inputs: project-average diffs, zero-filled; group totals
-    # (vectorized_impute.py:535-547).
-    impute_values = F.coalesce(F.col(a), F.lit(0.0))
-    df = df.withColumn("_impute_values", impute_values)
-    df = df.withColumn(
-        "_impute_jump",
-        F.when(F.col(cvg).isNotNull(), F.sum("_impute_values").over(group_w)),
     )
 
     # house_impute_factor: sum(avg)/sum(diff) over rows where both are
@@ -233,41 +186,46 @@ def _impute_one_column(
     factor = F.when(
         comparable_count <= total_count / 2, F.lit(1.0)
     ).otherwise(F.coalesce(factor_raw, F.lit(1.0)))
-    df = df.withColumn("_house_factor", factor)
+
+    # prev_cum_value: the cumulative value on the row just before the gap
+    # (negative -> NULL), seeded on the group's first row and broadcast to
+    # the whole group (vectorized_impute.py:481-505).
+    prev_raw = F.lag(F.col(cum_col)).over(house_w)
+    first_in_group = in_gap & (
+        F.coalesce(F.lag(c["cvg"]).over(house_w), F.lit(-1)) != c["cvg"]
+    )
+    # end_cum_value: last non-NA cumulative value inside the group
+    # (negative -> NULL) (vectorized_impute.py:611-614).
+    end_raw = F.when(in_gap, F.last(F.col(cum_col), ignorenulls=True).over(group_full))
 
     # --- the rule chain (vectorized_impute.py:630-748). Masks are disjoint;
     # one F.when cascade per output column.
-    in_gap = F.col(cvg).isNotNull()
-    has_jump = in_gap & F.col("_gap_jump").isNotNull()
-    no_jump = in_gap & F.col("_gap_jump").isNull()
+    prev_cum, end_cum, impute_jump = c["prev_cum"], c["end_cum"], c["impute_jump"]
+    impute_values, gap_jump = c["impute_values"], end_cum - prev_cum
+    has_jump = in_gap & gap_jump.isNotNull()
+    no_jump = in_gap & gap_jump.isNull()
 
-    r_negative = has_jump & (F.col("_gap_jump") < 0)
-    r_near_zero = has_jump & (F.col("_gap_jump") >= 0) & (F.col("_gap_jump") < EPS)
-    r_linear = has_jump & (F.col("_gap_jump") >= EPS) & (F.col("_impute_jump") < EPS)
-    r_scaled = has_jump & (F.col("_gap_jump") >= EPS) & (F.col("_impute_jump") >= EPS)
-    r_zero_end = no_jump & F.col("_end_cum").isNotNull() & F.col("_prev_cum").isNull() & (
-        F.col("_end_cum") < EPS
-    )
+    r_negative = has_jump & (gap_jump < 0)
+    r_near_zero = has_jump & (gap_jump >= 0) & (gap_jump < EPS)
+    r_linear = has_jump & (gap_jump >= EPS) & (impute_jump < EPS)
+    r_scaled = has_jump & (gap_jump >= EPS) & (impute_jump >= EPS)
+    r_zero_end = no_jump & end_cum.isNotNull() & prev_cum.isNull() & (end_cum < EPS)
     # >= EPS, not > EPS: the sibling zero-end rule is < EPS, and a strict >
     # would leave an end value of exactly EPS matching neither rule (the
     # gap would silently stay unimputed).
-    r_pos_end = no_jump & F.col("_end_cum").isNotNull() & F.col("_prev_cum").isNull() & (
-        F.col("_end_cum") >= EPS
-    )
-    r_no_end = no_jump & F.col("_end_cum").isNull() & F.col("_prev_cum").isNotNull()
+    r_pos_end = no_jump & end_cum.isNotNull() & prev_cum.isNull() & (end_cum >= EPS)
+    r_no_end = no_jump & end_cum.isNull() & prev_cum.isNotNull()
 
     # pandas `round(x, 10)` is numpy half-even -> F.bround, not F.round.
-    linear_value = qround(F.col("_gap_jump") / F.col(gap_len), 10)
-    scaled_value = qround(
-        F.col("_impute_values") * (F.col("_gap_jump") / F.col("_impute_jump")), 10
-    )
+    linear_value = qround(gap_jump / c["gap_length"], 10)
+    scaled_value = qround(impute_values * (gap_jump / impute_jump), 10)
 
     imputed_value = (
         F.when(r_negative | r_near_zero | r_zero_end, F.lit(0.0))
         .when(r_linear, linear_value)
         .when(r_scaled, scaled_value)
-        .when(r_pos_end, F.col("_impute_values"))
-        .when(r_no_end, F.col("_impute_values") * F.col("_house_factor"))
+        .when(r_pos_end, impute_values)
+        .when(r_no_end, impute_values * c["house_factor"])
     )
     rule_type = (
         F.when(r_negative, F.lit(int(ImputeType.NEGATIVE_GAP_JUMP)))
@@ -279,42 +237,78 @@ def _impute_one_column(
         .when(r_no_end, F.lit(int(ImputeType.NO_END_VALUE)))
         .cast("long")
     )
-    imputed_flag = imputed_value.isNotNull()
-
-    df = (
-        df.withColumn(old_diff_col(cum_col), F.col(d))
-        .withColumn("_new_diff", F.coalesce(imputed_value, F.col(d)))
-        .withColumn(ii_col, imputed_flag)
-        .withColumn(it_col, rule_type)
-    )
 
     # threshold clamp (vectorized_impute.py:58-109): out-of-bounds values are
     # replaced with the project average and THRESHOLD_ADJUSTED is OR-ed in.
+    new_diff = c["new_diff"]
+    outputs = {d: new_diff}
     th = thresholds.get(d)
     if th is not None:
-        out_of_bounds = F.col("_new_diff").isNotNull() & (
-            (F.col("_new_diff") < F.lit(th["Min"])) | (F.col("_new_diff") > F.lit(th["Max"]))
+        out_of_bounds = new_diff.isNotNull() & (
+            (new_diff < F.lit(th["Min"])) | (new_diff > F.lit(th["Max"]))
         )
-        df = (
-            df.withColumn(
-                it_col,
-                F.when(
-                    out_of_bounds,
-                    F.coalesce(F.col(it_col), F.lit(0)).bitwiseOR(
-                        F.lit(int(ImputeType.THRESHOLD_ADJUSTED))
-                    ),
-                ).otherwise(F.col(it_col)),
-            )
-            .withColumn(ii_col, F.when(out_of_bounds, F.lit(True)).otherwise(F.col(ii_col)))
-            .withColumn("_new_diff", F.when(out_of_bounds, F.col(a)).otherwise(F.col("_new_diff")))
-        )
+        outputs = {
+            it_col: F.when(
+                out_of_bounds,
+                F.coalesce(F.col(it_col), F.lit(0)).bitwiseOR(
+                    F.lit(int(ImputeType.THRESHOLD_ADJUSTED))
+                ),
+            ).otherwise(F.col(it_col)),
+            ii_col: F.when(out_of_bounds, F.lit(True)).otherwise(F.col(ii_col)),
+            d: F.when(out_of_bounds, F.col(a)).otherwise(new_diff),
+        }
 
-    df = df.withColumn(d, F.col("_new_diff"))
-    return df.drop(
-        cvg, gap_len, "_gap_start", "_cve_prev", "_prev_seed", "_prev_cum",
-        "_end_cum", "_gap_jump", "_impute_values", "_impute_jump",
-        "_house_factor", "_new_diff",
-    )
+    stages = [
+        {  # 1: gap starts, flags, impute values, house factor
+            t["gap_start"]: gap_start,
+            t["cve_prev"]: F.coalesce(
+                F.lag(cum_value_encountered).over(house_w), F.lit(False)
+            ),
+            # impute inputs: project-average diffs, zero-filled
+            # (vectorized_impute.py:535-547).
+            t["impute_values"]: F.coalesce(F.col(a), F.lit(0.0)),
+            t["house_factor"]: factor,
+        },
+        {t["cvg"]: F.when(is_na, running_group)},  # 2: gap-group id
+        {  # 3: group windows
+            t["gap_length"]: F.when(in_gap, F.count(F.lit(1)).over(group_w)),
+            t["prev_seed"]: F.when(first_in_group & (prev_raw >= 0), prev_raw),
+            t["end_cum"]: F.when(end_raw >= 0, end_raw),
+            t["impute_jump"]: F.when(in_gap, F.sum(impute_values).over(group_w)),
+        },
+        {  # 4: prev_seed broadcast to the whole group
+            t["prev_cum"]: F.when(
+                in_gap, F.first(c["prev_seed"], ignorenulls=True).over(group_full)
+            )
+        },
+        {  # 5: rule chain
+            old_diff_col(cum_col): F.col(d),
+            t["new_diff"]: F.coalesce(imputed_value, F.col(d)),
+            ii_col: imputed_value.isNotNull(),
+            it_col: rule_type,
+        },
+        outputs,  # 6: clamp and outputs
+    ]
+    return stages, list(t.values())
+
+
+def impute_columns(
+    df: DataFrame,
+    cumulative_columns: list[str],
+    thresholds: dict[str, dict[str, float]] | None = None,
+) -> DataFrame:
+    """Impute each cumulative column's Diff in-plan, in six ``withColumns``
+    projections that all columns share (see the module docstring). ``df``
+    carries ``<Var>``, ``<Var>Diff`` and the project average
+    ``<Var>Diff_avg``. Replaces every ``<Var>Diff`` in place and appends,
+    per column in order, ``<Var>OldDiff``, ``<Var>Diff_is_imputed`` and
+    ``<Var>Diff_impute_type``."""
+    if thresholds is None:
+        thresholds = THRESHOLDS
+    per_col = [_impute_stages(c, thresholds) for c in cumulative_columns]
+    for stage in zip(*(stages for stages, _ in per_col)):
+        df = df.withColumns({k: v for exprs in stage for k, v in exprs.items()})
+    return df.drop(*[name for _, temps in per_col for name in temps])
 
 
 def impute_and_normalize(
@@ -344,8 +338,6 @@ def impute_and_normalize(
     """
     if cumulative_columns is None:
         cumulative_columns = [c for c in IMPUTE_CUMULATIVE_COLUMNS if c in df.columns]
-    if thresholds is None:
-        thresholds = THRESHOLDS
     if normalize_columns is None:
         from ..config import CUMULATIVE_COLUMNS
 
@@ -364,8 +356,7 @@ def impute_and_normalize(
     # table. Broadcast at test scale; at 100 TB AQE picks sort-merge.
     df = df.join(avg_diffs, [project_id_column, "ReadingDate"], "left")
 
-    for cum_col in cumulative_columns:
-        df = _impute_one_column(df, cum_col, project_id_column, thresholds)
+    df = impute_columns(df, cumulative_columns, thresholds)
 
     # normalization (reference aggregate.py:199-211): Original := cumulative;
     # cumulative := cumsum(imputed Diff); Check := diff(new - original).

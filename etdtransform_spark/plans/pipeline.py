@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..config import (
     IMPUTE_CUMULATIVE_COLUMNS,
@@ -55,22 +56,28 @@ def run_pipeline(
     sink has no marker and is safely overwritten. Every family takes the
     same write-or-skip path; ``impute_gap_stats`` is derived from the
     written ``household_imputed`` family, so a missing gap-stats marker
-    rebuilds only that family and does not re-impute."""
+    rebuilds only that family and does not re-impute. A family written in
+    this pass is read back with the schema of the frame that built it, so
+    no job infers it; a skipped family's schema is inferred from its files."""
     os.makedirs(output_folder, exist_ok=True)
 
     def materialize(name, build, interval=None, partition_by=None):
-        """Write-or-skip one family; ``build`` is lazy so a skipped stage
-        never constructs its plan."""
+        """Write-or-skip one family and read it back; ``build`` is lazy so a
+        skipped stage never constructs its plan. A written family is read
+        with the built schema minus ``partition_by`` (Spark infers those)."""
         key = name if interval is None else f"{name}_{interval}"
         path = family_path(output_folder, name, interval)
+        schema = None
         if skip_existing and os.path.exists(os.path.join(path, "_SUCCESS")):
             written[key] = path
         else:
+            df = build()
             written[key] = write_family(
-                build(), output_folder, name,
+                df, output_folder, name,
                 interval=interval, partition_by=partition_by,
             )
-        return read_family(spark, output_folder, name, interval=interval)
+            schema = StructType([f for f in df.schema if f.name not in (partition_by or [])])
+        return read_family(spark, output_folder, name, interval=interval, schema=schema)
     cum_cols = cumulative_columns or [
         c for c in IMPUTE_CUMULATIVE_COLUMNS if c in household_df.columns
     ]

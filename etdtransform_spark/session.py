@@ -13,13 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")  # MemTotal
+
+
+def host_sizing() -> tuple[int, str]:
+    """Default ``local[N]`` cores and driver heap: the CPUs this process may
+    run on, and 3/4 of physical memory but at most 48g, so a small host is
+    not handed a heap larger than its RAM. ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEMORY`` override them."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or (
+        f"{min(48 * 1024, _physical_memory_bytes() * 3 // 4 // 2**20)}m"
+    )
+    return int(cpus), memory
+
+
 def get_spark(
     app_name: str = "etdtransform-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_memory = host_sizing()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -46,8 +62,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local[N] puts scheduler + all executor threads in ONE JVM: an
         # undersized heap turns into random multi-10s full-GC stalls under
-        # 32-thread load. Size generously on the 128 GiB test box.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # many-thread load, an oversized one into the OOM killer.
+        .config("spark.driver.memory", driver_memory)
         # Force the sort-based shuffle writer even for <200 reduce
         # partitions. The bypass-merge writer (default when reduce count is
         # below spark.shuffle.sort.bypassMergeThreshold=200) opens a file +

@@ -16,6 +16,7 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 _NS_COLUMNS_CACHE: dict[tuple[str, float | None], list[str]] = {}
@@ -137,15 +138,21 @@ def read_family(
     interval: str | None = None,
     format: str = "parquet",
     merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Family reader. ``merge_schema=True`` reconciles files written under
     different schema versions (columns added over time) into the union
     schema with missing columns null-filled — the read-side twin of the
     by-name append (footer scan per file; leave off when the schema is
-    known stable, it costs a listing pass at large file counts)."""
+    known stable, it costs a listing pass at large file counts).
+    ``schema``, the data schema of a frame just written, saves the job that
+    infers it from a footer. Leave out the partition columns: Spark infers
+    them from the paths, as an inferring read does (``long`` may read ``int``)."""
     reader = spark.read.format(format)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.load(family_path(base_folder, name, interval))
 
 

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from etdtransform_spark.operators.aggregate import (
     aggregate_project_data,
-    filtered_percentile_bounds,
     min_count_aggregate,
 )
+from etdtransform_spark.operators.impute import household_diff_max_bounds
 from etdtransform_spark.operators.resample import resample
 
 T0 = dt.datetime(2023, 1, 1, 0, 0, 0)
@@ -61,14 +61,19 @@ def test_aggregate_project_data_uses_registry(spark):
     assert out[_ts(0)]["n"] == 2
 
 
-def test_filtered_percentile_bounds_null_when_no_values_pass(spark):
-    rows = [(1, 0.0), (1, 1e-9), (2, 4.0), (2, 8.0)]
-    df = spark.createDataFrame(rows, "p long, v double")
-    out = {r["p"]: r for r in
-           filtered_percentile_bounds(df, ["p"], ["v"]).collect()}
-    assert out[1]["v_p95"] is None and out[1]["v_upper_bound"] is None
-    assert out[2]["v_p95"] == pytest.approx(7.8)  # exact interpolated p95
-    assert out[2]["v_upper_bound"] == pytest.approx(15.6)
+def test_household_diff_max_bounds_null_when_no_values_pass(spark):
+    """The project bound is 2 x the exact p95 of its house maxima above 1e-8,
+    NULL when no maximum passes (reference impute.py:55-90)."""
+    rows = [(1, 1, 0.0), (1, 2, 1e-9), (2, 3, 4.0), (2, 4, 8.0), (2, 4, 1.0)]
+    df = spark.createDataFrame(rows, "ProjectIdBSV long, HuisIdBSV long, vDiff double")
+    out = {r["HuisIdBSV"]: r for r in
+           household_diff_max_bounds(df, ["vDiff"]).collect()}
+    assert out[1]["vDiff_upper_bound"] is None
+    assert out[2]["vDiff_upper_bound"] is None
+    assert [out[h]["vDiff_huis_max"] for h in (3, 4)] == [4.0, 8.0]
+    # exact interpolated p95 of (4.0, 8.0) is 7.8
+    assert out[3]["vDiff_upper_bound"] == pytest.approx(15.6)
+    assert out[4]["vDiff_upper_bound"] == pytest.approx(15.6)
 
 
 def test_resample_min_count_gate(spark):

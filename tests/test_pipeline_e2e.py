@@ -39,9 +39,10 @@ def _series(house):
     return rows
 
 
-@pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
-    out_dir = str(tmp_path_factory.mktemp("etd_out"))
+INTERVALS = ["15min", "60min", "24h"]
+
+
+def _households(spark):
     rows = []
     for h in HOUSES:
         rows += _series(h)
@@ -49,7 +50,7 @@ def pipeline_out(spark, tmp_path_factory):
         "HuisIdBSV long, ProjectIdBSV long, ReadingDate timestamp, "
         + ", ".join(f"`{c}` double, `{c}Diff` double" for c in CUM_COLS)
     )
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             tuple(
                 r[k]
@@ -60,11 +61,67 @@ def pipeline_out(spark, tmp_path_factory):
         ],
         schema,
     )
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, tmp_path_factory):
+    out_dir = str(tmp_path_factory.mktemp("etd_out"))
     written = run_pipeline(
-        spark, df, out_dir, cumulative_columns=CUM_COLS,
-        intervals=["15min", "60min", "24h"],
+        spark, _households(spark), out_dir, cumulative_columns=CUM_COLS,
+        intervals=INTERVALS,
     )
     return out_dir, written
+
+
+@pytest.fixture(scope="module")
+def counted_pass(spark, tmp_path_factory):
+    """One pass into a fresh folder under its own job group, with every
+    frame ``run_pipeline`` reads back recorded as (name, interval, frame)."""
+    import etdtransform_spark.plans.pipeline as pipeline
+
+    out_dir = str(tmp_path_factory.mktemp("etd_counted"))
+    read_back = []
+
+    def recording_read_family(spark, base_folder, name, interval=None, **kw):
+        df = read_family(spark, base_folder, name, interval=interval, **kw)
+        read_back.append((name, interval, df))
+        return df
+
+    df = _households(spark)
+    sc = spark.sparkContext
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "read_family", recording_read_family)
+        sc.setJobGroup("etl_counted_pass", "run_pipeline job budget")
+        try:
+            run_pipeline(
+                spark, df, out_dir, cumulative_columns=CUM_COLS,
+                intervals=INTERVALS,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("etl_counted_pass")
+    return out_dir, read_back, len(jobs)
+
+
+def test_read_back_schema_equals_inferred(spark, counted_pass):
+    """The schema ``materialize`` carries into its read-back equals what an
+    inferring read of the written family gives: names, order, types and
+    nullability (the partition column comes back ``int`` either way)."""
+    out_dir, read_back, _ = counted_pass
+    assert len(read_back) == 15
+    for name, interval, df in read_back:
+        inferred = read_family(spark, out_dir, name, interval=interval)
+        assert df.schema == inferred.schema, (name, interval)
+    default = next(df for name, _, df in read_back if name == "household_default")
+    assert default.schema["ProjectIdBSV"].dataType.simpleString() == "int"
+
+
+def test_pass_job_budget(counted_pass):
+    """Spark jobs of one pass on the fixture (local[4], three intervals).
+    Job counts do not move with host load, so this bound only goes down."""
+    _, _, jobs = counted_pass
+    assert 0 < jobs <= 34, jobs
 
 
 def test_all_families_written(pipeline_out):
