@@ -602,9 +602,9 @@ def dsir_importance_weights(
     # pass from the scan (measured 3 FileScans / ~3x the md5 cost of one
     # pass at sf0.1; Catalyst's ReuseExchange does not unify the
     # subtrees). The histogram is bounded by docs x n_buckets x 2 rows —
-    # the same metadata-not-payload checkpoint scale as
-    # dedup.connected_components; storage is released by the
-    # ContextCleaner when the caller drops the result.
+    # the same metadata-not-payload checkpoint scale as the per-round
+    # labels of dedup.connected_components, and as there, storage is
+    # released by the ContextCleaner once nothing references the frame.
     g = (
         toks.groupBy(id_col, "_is_t", "b")
         .agg(F.count(F.lit(1)).alias("_k"))

@@ -14,48 +14,12 @@ full cross join; the exact-Jaccard verifier only runs on LSH candidates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from ..functions.scalars import fold_case, qround
 
 from ..functions.hashing import portable_hash64, word_shingles
 from ..sources.parquet import widen
-
-
-def _persistent_rdd_jmap(sc) -> dict:
-    """{rdd_id: java RDD} for every currently-persisted RDD, via the JVM's
-    persistent-RDD registry. PySpark has no public handle to the block
-    storage behind ``Dataset.localCheckpoint`` (``DataFrame.unpersist``
-    only releases *cached plans*), so iterative algorithms that checkpoint
-    per round need this to release superseded rounds. Best-effort: on any
-    py4j surprise we return {} and simply skip the release (storage then
-    accumulates for the job's lifetime, the pre-fix behavior)."""
-    try:
-        out: dict = {}
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            t = it.next()
-            out[t._1()] = t._2()
-        return out
-    except Exception:
-        return {}
-
-
-def _local_ckpt_rdd_id(df) -> int | None:
-    """RDD id of a ``localCheckpoint``-ed DataFrame's LogicalRDD root.
-
-    ``Dataset.localCheckpoint`` wraps the persisted internal-row RDD in a
-    ``LogicalRDD`` leaf; its ``rdd`` field is exactly the RDD registered in
-    the persistent-RDD registry, so releasing by THIS id can never touch an
-    RDD persisted concurrently by another job on the same SparkContext
-    (registry diffing could). Best-effort: None on any py4j surprise, in
-    which case the caller skips the release (storage accumulates for the
-    job's lifetime — the safe direction)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        return plan.rdd().id()
-    except Exception:
-        return None
 
 
 def exact_duplicates(
@@ -566,93 +530,79 @@ def connected_components(
     minimum id reachable in its connected component (label propagation /
     Pregel-min, the algorithm behind GraphX connectedComponents).
 
-    Iterative: each round joins labels to the symmetric edge list, takes the
-    neighborhood minimum, and stops when no label changed (driver checks one
-    count per round — the loop is the canonical Spark iterative-algorithm
-    shape). Near-dup graphs are dense cliques, so convergence takes
-    O(cluster diameter) ≈ 2-3 rounds. At billions of edges the same loop
-    holds (persist + AQE); the large-star/small-star variant (Kiveris et
-    al., "Connected Components in MapReduce", SoCC'14) halves rounds if
-    diameter grows.
+    The adjacency (both directions of every pair plus a self-loop per node)
+    is built once. Round 1 labels each node with its neighborhood minimum,
+    its starting label being itself; every later round joins the labels to
+    the adjacency and takes, in the same groupBy, the neighborhood minimum
+    and the node's old label (read through its self-loop). Each round is
+    ONE eager ``localCheckpoint``, and the number of labels that fell rides
+    along on it as an ``Observation``: the loop stops on the round where it
+    is 0, with no second job over the checkpoint. Near-dup graphs are dense
+    cliques, so that takes O(cluster diameter) ≈ 2-3 rounds; the
+    large-star/small-star variant (Kiveris et al., "Connected Components in
+    MapReduce", SoCC'14) halves rounds if diameter grows.
+
+    ``max_iter`` is the total number of propagation rounds. Labels still
+    falling in round ``max_iter`` raise ``RuntimeError``: a truncated
+    propagation splits a cluster into several, which dedup resolution would
+    keep as distinct documents.
 
     Returns (node, cluster_id) for every node that appears in ``edges``.
     """
-    # Materialize the (possibly expensive — LSH candidate generation)
-    # upstream ONCE: the symmetric union scans `edges` twice, and without
-    # this persist each scan recomputes the whole upstream pipeline.
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).persist()
-    # Self-loops fold the "keep own label" rule into the neighborhood min:
-    # one join+agg per round replaces the old join + left-join-back pair.
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    a, b = F.col(a_col), F.col(b_col)
+    # One scan of the (possibly expensive: LSH candidate generation)
+    # upstream, checkpointed because every round joins it.
+    # localCheckpoint, not persist: the lineage of persisted frames still
+    # compounds round over round (measured: 337 FileScans / 1170 Exchanges
+    # in the executed plan at 2 rounds of a 190-query suite), so Catalyst
+    # re-optimized the whole history on every downstream use. TRADE-OFF:
+    # localCheckpoint data is NON-RECOVERABLE; losing an executor fails the
+    # job instead of recomputing (a reliable `checkpoint()` dir is the HA
+    # option at cluster scale). Superseded rounds are released by the
+    # ContextCleaner once nothing references them.
     adj = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .union(
-            e.select("src").union(e.select("dst")).distinct()
-            .select(F.col("src"), F.col("src").alias("dst"))
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                    F.struct(a.alias("src"), a.alias("dst")),
+                    F.struct(b.alias("src"), b.alias("dst")),
+                )
+            )
         )
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    init_labels = adj.select(F.col("src").alias("v")).distinct().withColumn(
-        "label", F.col("v")
-    ).persist()
-    labels = init_labels
-    # Labels are monotone non-increasing under Pregel-min, so the exact
-    # decimal sum of all labels is a convergence certificate: unchanged sum
-    # ⟺ fixpoint. One scalar per round crosses to the driver — no
-    # old-vs-new comparison join. decimal(38,0) cannot overflow for any
-    # realistic node count (2^63 ids × 10^18 nodes < 10^38).
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    sc = edges.sparkSession.sparkContext
-    prev_ckpt_ids: set[int] = set()
+    step = adj.groupBy("src").agg(
+        F.min("dst").alias("label"), F.col("src").alias("old")
+    )
     for _ in range(max_iter):
-        # localCheckpoint, not persist: persist caches partitions but the
-        # LINEAGE still compounds round over round — the returned frame's
-        # plan held one full upstream copy (LSH candidate generation +
-        # corpus scan) PER ROUND (measured: 337 FileScans / 1170 Exchanges
-        # in the executed plan at 2 rounds of a 190-query suite). Catalyst
-        # re-optimizes that whole tree on every downstream use, and a lost
-        # executor would recompute the entire history. Checkpointing
-        # truncates each round to a LogicalRDD root (the shape pagerank
-        # already uses); the convergence agg right below materializes it,
-        # so no extra pass is paid. TRADE-OFF: localCheckpoint data is
-        # NON-RECOVERABLE — losing an executor fails the job instead of
-        # recomputing (a reliable `checkpoint()` dir is the HA option at
-        # cluster scale).
-        new_labels = (
-            adj.join(labels, adj.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("v"), "label")
-            .localCheckpoint(eager=False)
+        falling = Observation()
+        labels = (
+            step.observe(
+                falling, F.count_if(F.col("label") < F.col("old")).alias("n")
+            )
+            .select(F.col("src").alias("node"), F.col("label").alias("cluster_id"))
+            .localCheckpoint(eager=True)
         )
-        new_rid = _local_ckpt_rdd_id(new_labels)
-        new_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        # The convergence agg above materialized the new checkpoint, so the
-        # PREVIOUS round's checkpointed labels are now superseded — release
-        # them, or executor storage accumulates one node-sized dataset per
-        # round (labels never reference older rounds once checkpointed).
-        # Release by the id read off OUR dataset's LogicalRDD root, never by
-        # diffing the global persistent-RDD registry: a concurrent job on
-        # the same SparkContext persisting between snapshots would be
-        # misattributed and unpersisted — and localCheckpoint data is
-        # non-recoverable, so that would fail the foreign job.
-        for rid in prev_ckpt_ids:
-            jrdd = _persistent_rdd_jmap(sc).get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        prev_ckpt_ids = {new_rid} if new_rid is not None else set()
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    init_labels.unpersist()
-    adj.unpersist()
-    e.unpersist()
-    return labels.select(F.col("v").alias("node"), F.col("label").alias("cluster_id"))
+        changed = falling.get["n"]
+        if changed == 0:
+            return labels
+        step = (
+            adj.join(labels, adj.dst == labels.node)
+            .groupBy("src")
+            .agg(
+                F.min("cluster_id").alias("label"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("cluster_id"))).alias("old"),
+            )
+        )
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} "
+        f"rounds: {changed} labels still changing in the last round"
+    )
 
 
 def embedding_near_duplicates(

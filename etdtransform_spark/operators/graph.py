@@ -23,7 +23,7 @@ implement the identical recurrence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.scalars import qround
@@ -141,7 +141,8 @@ def transitive_closure(
 
     At scale: frontier size is the live quantity (result rows at depth d);
     the edge table partitioning is reused every round, and the early-out
-    touches only a count of the latest delta, never the accumulator."""
+    reads only the row count observed on the latest delta's checkpoint,
+    never the accumulator."""
     e = edges.select(
         F.col(child_col).alias("node"),
         F.col(parent_col).alias("ancestor"),
@@ -165,6 +166,9 @@ def transitive_closure(
         .localCheckpoint(eager=False)
     )
     for _ in range(1, max_depth):
+        # the round's row count is observed on its own checkpoint job, so
+        # the early-out costs no job of its own
+        grown = Observation()
         nxt = (
             frontier.join(up, frontier["ancestor"] == up["_c"])
             .select(
@@ -172,9 +176,10 @@ def transitive_closure(
                 F.col("_p").alias("ancestor"),
                 (F.col("depth") + 1).alias("depth"),
             )
+            .observe(grown, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        if grown.get["n"] == 0:
             break
         rounds.append(nxt)
         frontier = nxt
