@@ -14,15 +14,21 @@ reference relies on.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import INTERVALS
+from .config import dataset_families
 from .operators.periods import add_rolling_avg, mark_coldest_weeks, weekly_stats
 from .sources.knmi import join_weather_data
-from .sources.parquet import join_index, read_family
-
-HOUSEHOLD_TABLES = ["default", "calculated"]
+from .sources.parquet import (
+    data_files,
+    family_committed,
+    family_path,
+    join_index,
+    read_family,
+)
 
 
 def get_household_tables(
@@ -34,24 +40,22 @@ def get_household_tables(
     station_mapping: DataFrame | None = None,
     metadata_columns: list[str] | None = None,
 ) -> dict[str, DataFrame]:
-    """Lazy household tables per interval (plus ``default``/``calculated``
-    when present), each left-joined with the (broadcast) index and optionally
-    weather (reference get_household_tables, load_data.py:23-67)."""
+    """Lazy household tables per interval (plus ``default``/``calculated``),
+    each left-joined with the (broadcast) index and optionally weather
+    (reference get_household_tables, load_data.py:23-67). Only committed
+    families are served (``family_committed``); a committed family that
+    fails to read raises."""
     out: dict[str, DataFrame] = {}
-    names = [(t, None) for t in HOUSEHOLD_TABLES] + [
-        ("household", iv) for iv in (intervals or INTERVALS)
-    ]
-    for name, iv in names:
-        family = f"household_{name}" if iv is None else name
-        try:
-            df = read_family(spark, folder, family, iv)
-        except Exception:  # noqa: BLE001 — family not materialized
+    household = ("household_default", "household_calculated", "household")
+    for name, iv in dataset_families(intervals):
+        if name not in household or not family_committed(folder, name, iv):
             continue
+        df = read_family(spark, folder, name, iv)
         if index_df is not None:
             df = join_index(df, index_df, metadata_columns)
         if weather is not None and station_mapping is not None:
             df = join_weather_data(df, weather, station_mapping)
-        out[name if iv is None else iv] = df
+        out[iv or name.removeprefix("household_")] = df
     return out
 
 
@@ -63,13 +67,13 @@ def get_project_tables(
     station_mapping: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Lazy project-level tables per interval, optionally weather-joined
-    (reference get_project_tables, load_data.py:320-351)."""
+    (reference get_project_tables, load_data.py:320-351). Only committed
+    families are served; a committed family that fails to read raises."""
     out: dict[str, DataFrame] = {}
-    for iv in intervals or INTERVALS:
-        try:
-            df = read_family(spark, folder, "project", iv)
-        except Exception:  # noqa: BLE001
+    for name, iv in dataset_families(intervals):
+        if name != "project" or not family_committed(folder, name, iv):
             continue
+        df = read_family(spark, folder, name, iv)
         if weather is not None and station_mapping is not None:
             df = join_weather_data(df, weather, station_mapping)
         out[iv] = df
@@ -131,36 +135,22 @@ def register_sql_views(
     intervals: list[str] | None = None,
     index_df: DataFrame | None = None,
 ) -> list[str]:
-    """SQL façade over the dataset catalog: every materialized family in
-    ``folder`` becomes a temp view (``household_60min``, ``project_24h``,
-    ``avg_diffs``, ...), so users can run plain ``spark.sql`` over the
-    pipeline outputs — the capability the reference delegates to Ibis'
-    DuckDB backend (SURVEY §3B), here served by Catalyst directly. Views
-    are lazy: registering costs one schema read per family; predicate
-    pushdown/pruning apply to queries against them as to any scan.
+    """SQL façade over the dataset catalog: every committed family in
+    ``folder`` (``config.DATASET_FAMILIES`` of ``intervals``, with a
+    ``_SUCCESS`` marker) becomes a temp view (``household_60min``,
+    ``project_24h``, ``avg_diffs``, ...), so users can run plain
+    ``spark.sql`` over the pipeline outputs — the capability the reference
+    delegates to Ibis' DuckDB backend (SURVEY §3B), here served by
+    Catalyst directly. An absent or uncommitted family gets no view; a
+    committed one that fails to read raises. Views are lazy: registering
+    costs one schema read per family; predicate pushdown/pruning apply to
+    queries against them as to any scan.
 
     Returns the list of registered view names.
     """
-    from .sources.parquet import family_path
-    import os
-
-    names: list[tuple[str, str | None]] = [
-        ("household_default", None),
-        ("household_calculated", None),
-        ("household_imputed", None),
-        ("household_aggregated_diff", None),
-        ("avg_diffs", None),
-        ("household_diff_max_bounds", None),
-        ("impute_gap_stats", None),
-        ("impute_summary_household", None),
-        ("impute_summary_project", None),
-    ]
-    for iv in intervals or INTERVALS:
-        names += [("household", iv), ("project", iv)]
     registered: list[str] = []
-    for name, iv in names:
-        path = family_path(folder, name, iv)
-        if not os.path.exists(path):
+    for name, iv in dataset_families(intervals):
+        if not family_committed(folder, name, iv):
             continue
         df = read_family(spark, folder, name, iv)
         if (
@@ -179,54 +169,34 @@ def register_sql_views(
 
 
 def catalog(spark: SparkSession, folder: str) -> DataFrame:
-    """Discovery surface for the dataset catalog: one row per materialized
-    family with its on-disk size, file count, column count, and commit
-    state — what a user (or an ops dashboard) lists before querying.
-    Metadata-only: directory listings plus one schema read per family,
-    no data scanned.
+    """Discovery surface for the dataset catalog: one row per family of
+    ``config.DATASET_FAMILIES`` whose folder exists, with its on-disk size,
+    file count, column count, and commit state — what a user (or an ops
+    dashboard) lists before querying. An uncommitted family (an
+    interrupted write) is listed with ``committed`` false and
+    ``n_columns`` NULL, and is not read. Metadata-only: directory listings
+    plus one schema read per committed family, no data scanned.
 
     Returns (family, interval, path, n_files, size_bytes, n_columns,
     committed).
     """
-    import os
-
-    from .sources.parquet import family_path, read_family
-
-    base_names: list[tuple[str, str | None]] = [
-        ("household_default", None),
-        ("household_calculated", None),
-        ("household_imputed", None),
-        ("household_aggregated_diff", None),
-        ("avg_diffs", None),
-        ("household_diff_max_bounds", None),
-        ("impute_gap_stats", None),
-        ("impute_summary_household", None),
-        ("impute_summary_project", None),
-    ]
-    for iv in INTERVALS:
-        base_names += [("household", iv), ("project", iv)]
     rows = []
-    for name, iv in base_names:
-        path = family_path(folder, name, iv)
-        if not os.path.exists(path):
+    for name, iv in dataset_families():
+        committed = family_committed(folder, name, iv)
+        if committed is None:
             continue
-        n_files = size = 0
-        committed = False
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f == "_SUCCESS":
-                    committed = True
-                elif not f.startswith(("_", ".")):
-                    n_files += 1
-                    size += os.path.getsize(os.path.join(root, f))
-        n_cols = len(read_family(spark, folder, name, iv).columns)
+        path = family_path(folder, name, iv)
+        files = data_files(path)
+        n_cols = None
+        if committed:
+            n_cols = len(read_family(spark, folder, name, iv).columns)
         rows.append(
             (
                 name,
                 iv,
                 path,
-                n_files,
-                size,
+                len(files),
+                sum(os.path.getsize(f) for f in files),
                 n_cols,
                 committed,
             )

@@ -182,20 +182,31 @@ THRESHOLDS: dict[str, dict[str, float]] = {
     }.items()
 }
 
-# Dataset family names (the de-facto catalog; reference tests/conftest.py:29-49).
-DATASET_FAMILIES: list[str] = [
-    "household_default",
-    "avg_diffs",
-    "household_diff_max_bounds",
-    "household_imputed",
-    "household_aggregated_diff",
-    "impute_gap_stats",
-    "impute_summary_household",
-    "impute_summary_project",
-    "household_calculated",
-    *[f"household_{iv}" for iv in INTERVALS],
-    *[f"project_{iv}" for iv in INTERVALS],
+# The dataset families ``run_pipeline`` writes, in catalog order (reference
+# tests/conftest.py:29-49), as (name, interval): interval is None for the
+# per-pass families and one of INTERVALS for the resampled ones, whose key
+# and view name is ``<name>_<interval>``. The read API serves exactly these.
+DATASET_FAMILIES: list[tuple[str, str | None]] = [
+    ("household_default", None),
+    ("household_calculated", None),
+    ("household_imputed", None),
+    ("household_aggregated_diff", None),
+    ("avg_diffs", None),
+    ("household_diff_max_bounds", None),
+    ("impute_gap_stats", None),
+    ("impute_summary_household", None),
+    ("impute_summary_project", None),
+    *[(name, iv) for iv in INTERVALS for name in ("household", "project")],
 ]
+
+
+def dataset_families(
+    intervals: list[str] | None = None,
+) -> list[tuple[str, str | None]]:
+    """``DATASET_FAMILIES`` of a pass over ``intervals`` (default: all)."""
+    ivs = intervals or INTERVALS
+    return [(name, iv) for name, iv in DATASET_FAMILIES if iv is None or iv in ivs]
+
 
 KEY_COLUMNS: list[str] = ["HuisIdBSV", "ProjectIdBSV"]
 READING_DATE: str = "ReadingDate"

@@ -11,11 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import coalesce0
+
 
 def add_calculated_columns(df: DataFrame) -> DataFrame:
     """Add the 8 derived columns and rename Zon-opwekTotaalDiff ->
-    ZonopwekBruto. Single ``withColumns`` pass; later columns reference
-    earlier ones exactly as the reference chains them.
+    ZonopwekBruto. One ``withColumns`` projection: a later column is built
+    from the earlier columns' expressions, exactly as the reference chains
+    them.
 
     Input diff columns absent from ``df`` are treated as all-zero (the
     reference operates on the full wide frame where every diff column
@@ -30,61 +33,46 @@ def add_calculated_columns(df: DataFrame) -> DataFrame:
         else:
             df = df.withColumnRenamed(zon, "ZonopwekBruto")
 
-    present = set(df.columns) | set(CALCULATED_COLUMNS)
+    present = set(df.columns)
 
-    from ..functions.scalars import coalesce0 as _c0
-
-    def coalesce0(name):
-        # missing sensors contribute 0; present columns use the shared
-        # fillna(0) helper (functions.scalars.coalesce0)
+    def diff(name):
+        # missing sensors contribute 0; present columns are fillna(0)-ed.
+        # The derived sums below are never NULL, so they need no coalesce.
         if name not in present:
             return F.lit(0.0)
-        return _c0(F.col(f"`{name}`"))
+        return coalesce0(F.col(f"`{name}`"))
 
-    teruglevering = coalesce0("ElektriciteitTerugleveringLaagDiff") + coalesce0(
+    teruglevering = diff("ElektriciteitTerugleveringLaagDiff") + diff(
         "ElektriciteitTerugleveringHoogDiff"
     )
-    netto = coalesce0("ElektriciteitNetgebruikLaagDiff") + coalesce0(
+    netto = diff("ElektriciteitNetgebruikLaagDiff") + diff(
         "ElektriciteitNetgebruikHoogDiff"
     )
-    df = df.withColumns(
+    netuitwisseling = netto - teruglevering
+    warmtepomp = diff("ElektriciteitsgebruikWarmtepompDiff") + diff(
+        "ElektriciteitsgebruikBoosterDiff"
+    )
+    gebouwgebonden = (
+        warmtepomp
+        + diff("ElektriciteitsgebruikBoilervatDiff")
+        + diff("ElektriciteitsgebruikWTWDiff")
+        + diff("ElektriciteitsgebruikRadiatorDiff")
+    )
+    zelfgebruik = diff("ZonopwekBruto") - teruglevering
+    return df.withColumns(
         {
             "TerugleveringTotaalNetto": teruglevering,
             "ElektriciteitsgebruikTotaalNetto": netto,
+            "Netuitwisseling": netuitwisseling,
+            "ElektriciteitsgebruikTotaalWarmtepomp": warmtepomp,
+            "ElektriciteitsgebruikTotaalGebouwgebonden": gebouwgebonden,
+            "ElektriciteitsgebruikTotaalHuishoudelijk": netuitwisseling
+            + diff("ZonopwekBruto")
+            - gebouwgebonden,
+            "Zelfgebruik": zelfgebruik,
+            "ElektriciteitsgebruikTotaalBruto": netto + zelfgebruik,
         }
     )
-    df = df.withColumn(
-        "Netuitwisseling",
-        coalesce0("ElektriciteitsgebruikTotaalNetto")
-        - coalesce0("TerugleveringTotaalNetto"),
-    )
-    df = df.withColumn(
-        "ElektriciteitsgebruikTotaalWarmtepomp",
-        coalesce0("ElektriciteitsgebruikWarmtepompDiff")
-        + coalesce0("ElektriciteitsgebruikBoosterDiff"),
-    )
-    df = df.withColumn(
-        "ElektriciteitsgebruikTotaalGebouwgebonden",
-        coalesce0("ElektriciteitsgebruikTotaalWarmtepomp")
-        + coalesce0("ElektriciteitsgebruikBoilervatDiff")
-        + coalesce0("ElektriciteitsgebruikWTWDiff")
-        + coalesce0("ElektriciteitsgebruikRadiatorDiff"),
-    )
-    df = df.withColumn(
-        "ElektriciteitsgebruikTotaalHuishoudelijk",
-        coalesce0("Netuitwisseling")
-        + coalesce0("ZonopwekBruto")
-        - coalesce0("ElektriciteitsgebruikTotaalGebouwgebonden"),
-    )
-    df = df.withColumn(
-        "Zelfgebruik",
-        coalesce0("ZonopwekBruto") - coalesce0("TerugleveringTotaalNetto"),
-    )
-    df = df.withColumn(
-        "ElektriciteitsgebruikTotaalBruto",
-        coalesce0("ElektriciteitsgebruikTotaalNetto") + coalesce0("Zelfgebruik"),
-    )
-    return df
 
 
 CALCULATED_COLUMNS = [

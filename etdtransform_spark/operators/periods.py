@@ -183,7 +183,10 @@ def mark_coldest_weeks(
     """Rank ISO weeks by weekly average within each group and flag the k
     lowest (the reference's coldest-2-ISO-weeks logic,
     load_data.py:204-229). ``full_weeks_only`` restricts candidates to weeks
-    with 7 observed days, as the reference filters short edge weeks.
+    with 7 observed days, as the reference filters short edge weeks. The
+    reference flags ``row_number < 2`` over a 0-based numbering, i.e. the
+    first two rows; Spark's ``row_number`` is 1-based, so the flag is
+    ``<= k``.
 
     NOTE on ties: the window carries the (iso_year, week_of_year) tiebreak —
     the repo-wide total-order discipline that makes every ranked result

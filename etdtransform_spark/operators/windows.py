@@ -1,5 +1,5 @@
-"""Ordered / window operators: lag-diff, forward-fill, count-gated rolling
-means, rank / top-k flags.
+"""Ordered / window operators: count-gated and centered rolling means,
+rolling quantiles and time-span windows.
 
 These are the reference engine's core primitives (SURVEY §2.5). Every ordered
 op partitions by the household (or station) key — gap/cumsum semantics must
@@ -10,29 +10,8 @@ guard structural, which is what lets the same code run on 1000 executors).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
-
-
-def ordered_window(partition_cols: list[str], order_cols: list[str]) -> WindowSpec:
-    return Window.partitionBy(*partition_cols).orderBy(*order_cols)
-
-
-def lag_diff(col: Column | str, w: WindowSpec) -> Column:
-    """Consecutive difference of a cumulative column; NULL on the first row of
-    each partition (reference aggregate.py:203-207 re-derivation, and etdmap's
-    upstream Diff computation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c - F.lag(c).over(w)
-
-
-def forward_fill(col: Column | str, w: WindowSpec) -> Column:
-    """Last non-null value at or before the current row (pandas ``ffill``
-    within group; reference vectorized_impute.py:409,501-505)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.last(c, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
 
 
 def rolling_avg_min_periods(
@@ -71,22 +50,6 @@ def rolling_avg_centered(
     frame = w.rowsBetween(-before, after)
     cnt = F.count(c).over(frame)
     return F.when(cnt >= min_periods, F.avg(c).over(frame))
-
-
-def rank_in_group(order_col: Column, partition_cols: list[str]) -> Column:
-    """Reference ISO-week rank (load_data.py:204-215)."""
-    return F.rank().over(Window.partitionBy(*partition_cols).orderBy(order_col))
-
-
-def top_k_flag(order_col: Column, partition_cols: list[str], k: int) -> Column:
-    """row_number()-based top-k membership flag (reference load_data.py:217-229
-    marks the 2 coldest ISO weeks with ``row_number < 2`` over a 0-based
-    numbering — i.e. the first two rows; Spark row_number is 1-based so the
-    equivalent is ``<= k``)."""
-    return (
-        F.row_number().over(Window.partitionBy(*partition_cols).orderBy(order_col))
-        <= k
-    )
 
 
 def rolling_quantile(

@@ -17,9 +17,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..config import (
+    CUMULATIVE_COLUMNS,
     IMPUTE_CUMULATIVE_COLUMNS,
     INTERVALS,
     get_diff_columns,
@@ -34,7 +36,12 @@ from ..operators.impute import (
     imputation_summaries,
 )
 from ..operators.resample import resample
-from ..sources.parquet import family_path, read_family, write_family
+from ..sources.parquet import (
+    family_committed,
+    family_path,
+    read_family,
+    write_family,
+)
 
 
 def run_pipeline(
@@ -46,19 +53,22 @@ def run_pipeline(
     skip_existing: bool = False,
 ) -> dict[str, str]:
     """Run the full chain from a combined household DataFrame; returns the
-    map of family name -> written path.
+    map of family key -> written path, one entry per family of
+    ``config.dataset_families(intervals)`` (key ``<name>_<interval>`` for
+    the resampled ones).
 
     ``skip_existing`` is the distributed twin of the reference's
     ``sorted=``/``diffs_calculated=`` skip flags (impute.py:587-637) made
-    structural: a family whose sink already holds a committed write (Spark's
-    ``_SUCCESS`` marker) is read back instead of recomputed, so an
-    interrupted run resumes from its last completed stage. A half-written
-    sink has no marker and is safely overwritten. Every family takes the
-    same write-or-skip path; ``impute_gap_stats`` is derived from the
-    written ``household_imputed`` family, so a missing gap-stats marker
-    rebuilds only that family and does not re-impute. A family written in
-    this pass is read back with the schema of the frame that built it, so
-    no job infers it; a skipped family's schema is inferred from its files."""
+    structural: a family whose sink already holds a committed write
+    (``family_committed``: Spark's ``_SUCCESS`` marker) is read back instead
+    of recomputed, so an interrupted run resumes from its last completed
+    stage. A half-written sink has no marker and is safely overwritten.
+    Every family takes the same write-or-skip path; ``impute_gap_stats`` is
+    derived from the written ``household_imputed`` family, so a missing
+    gap-stats marker rebuilds only that family and does not re-impute. A
+    family written in this pass is read back with the schema of the frame
+    that built it, so no job infers it; a skipped family's schema is
+    inferred from its files."""
     os.makedirs(output_folder, exist_ok=True)
 
     def materialize(name, build, interval=None, partition_by=None):
@@ -68,7 +78,7 @@ def run_pipeline(
         key = name if interval is None else f"{name}_{interval}"
         path = family_path(output_folder, name, interval)
         schema = None
-        if skip_existing and os.path.exists(os.path.join(path, "_SUCCESS")):
+        if skip_existing and family_committed(output_folder, name, interval):
             written[key] = path
         else:
             df = build()
@@ -85,8 +95,6 @@ def run_pipeline(
     # the project-mean-of-diffs stage averages EVERY registry diff column
     # present, not just the imputed ones (reference aggregate.py:163 uses the
     # full etdmap cumulative list)
-    from ..config import CUMULATIVE_COLUMNS
-
     all_diff_cols = diff_cols + [
         get_diff_columns([c])[0]
         for c in CUMULATIVE_COLUMNS
@@ -131,8 +139,6 @@ def run_pipeline(
     )
 
     # stage: project-mean of diffs (aggregate.py:190-194)
-    from pyspark.sql import functions as F
-
     materialize(
         "household_aggregated_diff",
         lambda: imputed.groupBy("ProjectIdBSV", "ReadingDate").agg(

@@ -131,6 +131,30 @@ def family_path(base_folder: str, name: str, interval: str | None = None) -> str
     return os.path.join(base_folder, f"{fname}.parquet")
 
 
+def family_committed(
+    base_folder: str, name: str, interval: str | None = None
+) -> bool | None:
+    """Whether the family is written: True when its sink holds Spark's
+    ``_SUCCESS`` commit marker, False when the folder exists without one
+    (an interrupted or foreign write, never read), None when it is absent."""
+    path = family_path(base_folder, name, interval)
+    if not os.path.isdir(path):
+        return None
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def data_files(path: str) -> list[str]:
+    """The data files of a dataset folder, as Spark and pyarrow list them:
+    no file or folder whose name starts with ``_`` or ``.`` (``_SUCCESS``,
+    ``_temporary/``, ``.crc`` checksums). Metadata only."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(root, f) for f in files
+                if not f.startswith(("_", "."))]
+    return out
+
+
 def read_family(
     spark: SparkSession,
     base_folder: str,
@@ -312,45 +336,27 @@ def compact_family(
     partition_by: list[str] | None = None,
     format: str = "parquet",
 ) -> str:
-    """Small-file compaction for a stage sink: rewrite the family into
-    files sized near ``target_file_mb``. The operational fix for the
-    classic 100 TB failure mode — thousands of tiny task outputs per
-    partition directory turning every downstream scan into metadata churn.
-
-    File count derives from the CURRENT on-disk byte size (driver-side
-    listing of one directory — metadata only, no data read), then the
-    rewrite is one shuffle-free ``coalesce`` when shrinking. The swap is a
-    two-rename sequence (write tmp sibling → move old aside → move tmp in)
-    — never a half-written family visible, though a crash exactly between
-    the renames leaves the family briefly absent with both siblings intact;
-    stale ``_compact_tmp``/``_compact_old`` siblings from any earlier crash
-    are cleaned up on entry so retries always succeed.
+    """Small-file compaction for a stage sink, in place: the family is
+    rewritten by :func:`compact_parquet` into a ``_compact_tmp`` sibling,
+    then swapped in by two renames (move old aside → move tmp in), so a
+    half-written family is never visible. A crash exactly between the
+    renames leaves the family briefly absent with the old data intact in
+    its ``_compact_old`` sibling; the next call restores it first. A bad
+    ``target_file_mb`` raises before any file is written or removed.
     """
-    import math
     import shutil
 
     path = family_path(base_folder, name, interval)
-    tmp_stale = path + "._compact_tmp"
-    bak_stale = path + "._compact_old"
-    if not os.path.exists(path) and os.path.exists(bak_stale):
+    tmp = path + "._compact_tmp"
+    bak = path + "._compact_old"
+    if not os.path.exists(path) and os.path.exists(bak):
         # crashed between the two renames: the old data is intact in the
         # sibling — restore it before recompacting
-        os.rename(bak_stale, path)
-    shutil.rmtree(tmp_stale, ignore_errors=True)
-    shutil.rmtree(bak_stale, ignore_errors=True)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith("_"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.format(format).load(path).coalesce(n_files)
-    tmp = path + "._compact_tmp"
-    writer = df.write.mode("overwrite").format(format)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
-    bak = path + "._compact_old"
+        os.rename(bak, path)
+    compact_parquet(
+        spark, path, tmp, target_file_mb, partition_by=partition_by, format=format
+    )
+    shutil.rmtree(bak, ignore_errors=True)
     os.rename(path, bak)
     os.rename(tmp, path)
     shutil.rmtree(bak)
@@ -916,6 +922,8 @@ def compact_parquet(
     src_path: str,
     dst_path: str,
     target_mb: int = 128,
+    partition_by: list[str] | None = None,
+    format: str = "parquet",
 ) -> str:
     """Small-files compaction — the layout-maintenance pass every
     long-lived 100 TB table needs: streaming/incremental writers leave
@@ -926,34 +934,25 @@ def compact_parquet(
     price of even output; run it per partition directory in production
     so the unit of work is bounded).
 
-    File sizing reads parquet FOOTER metadata only (pyarrow dataset
-    listing, no data scan). Returns dst_path.
-
-    Sibling: :func:`compact_family` is the FAMILY-SINK variant — same
-    problem, different trade: it compacts in place with an atomic
-    two-rename swap and a shuffle-free ``coalesce`` (cheap, but file
-    sizes inherit input skew). This one writes to a NEW path with a
-    round-robin ``repartition`` (one shuffle, evenly-sized output) —
-    pick by whether the caller owns the path lifecycle and needs even
-    files for downstream range reads.
+    File sizing lists the data files only (:func:`data_files`, no data
+    read). ``partition_by`` and ``format`` are the source's layout and
+    are kept in ``dst_path``. :func:`compact_family` uses this to compact
+    a family sink in place. Returns dst_path.
     """
     import math
 
-    import pyarrow.dataset as ds
-
     if target_mb < 1:
         raise ValueError(f"target_mb must be >= 1, got {target_mb}")
-    dataset = ds.dataset(src_path, format="parquet")
-    import os
-
-    total = sum(os.path.getsize(f) for f in dataset.files)
+    total = sum(os.path.getsize(f) for f in data_files(src_path))
     n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    (
-        spark.read.parquet(src_path)
+    writer = (
+        spark.read.format(format).load(src_path)
         .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(dst_path)
+        .write.mode("overwrite").format(format)
     )
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(dst_path)
     return dst_path
 
 
@@ -961,12 +960,7 @@ def compaction_audit(spark, path: str) -> DataFrame:
     """File-count / size spread of a parquet dataset (metadata only):
     ONE row (n_files, total_bytes, min_bytes, max_bytes, avg_bytes) —
     the before/after check for :func:`compact_parquet`."""
-    import os
-
-    import pyarrow.dataset as ds
-
-    files = ds.dataset(path, format="parquet").files
-    sizes = [int(os.path.getsize(f)) for f in files]
+    sizes = [int(os.path.getsize(f)) for f in data_files(path)]
     rows = [(
         len(sizes),
         int(sum(sizes)),

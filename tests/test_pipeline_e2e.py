@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from etdtransform_spark.config import dataset_families
 from etdtransform_spark.operators.calculated import CALCULATED_COLUMNS
 from etdtransform_spark.plans.pipeline import run_pipeline
 from etdtransform_spark.sources.parquet import read_family
@@ -125,15 +126,13 @@ def test_pass_job_budget(counted_pass):
 
 
 def test_all_families_written(pipeline_out):
+    """A pass writes exactly the catalog's families, so the views, the
+    catalog and the table dicts see every family it writes."""
     _, written = pipeline_out
-    expected = {
-        "household_default", "household_diff_max_bounds", "avg_diffs",
-        "household_imputed", "impute_gap_stats", "impute_summary_household",
-        "impute_summary_project", "household_aggregated_diff",
-        "household_calculated", "household_15min", "household_60min",
-        "household_24h", "project_15min", "project_60min", "project_24h",
+    assert set(written) == {
+        name if iv is None else f"{name}_{iv}"
+        for name, iv in dataset_families(INTERVALS)
     }
-    assert expected <= set(written)
 
 
 def test_imputed_preserves_rows_and_fills_gaps(spark, pipeline_out):
@@ -318,6 +317,96 @@ def test_compact_family_reduces_files_preserves_rows(spark, tmp_path):
     assert not os.path.exists(out + "/frag.parquet._compact_old")
 
 
+def test_compact_family_bad_target_leaves_family_untouched(spark, tmp_path):
+    """A target below 1 MB raises ValueError before anything on disk
+    changes: the family's files and a stale sibling stay as they were."""
+    import os
+
+    from etdtransform_spark.sources.parquet import (
+        compact_family,
+        family_path,
+        write_family,
+    )
+
+    out = str(tmp_path)
+    write_family(spark.range(0, 100).repartition(4), out, "fam")
+    path = family_path(out, "fam")
+    os.makedirs(path + "._compact_tmp")
+
+    def listing():
+        files = [os.path.join(r, f) for r, _d, fs in os.walk(out) for f in fs]
+        return sorted(os.listdir(out)) + sorted(
+            (f, os.path.getsize(f)) for f in files
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="target_mb"):
+        compact_family(spark, out, "fam", target_file_mb=0)
+    assert listing() == before
+
+
+def test_read_api_serves_committed_families_only(spark, tmp_path):
+    """One family committed per kind, one interrupted (a ``_temporary``
+    folder, no ``_SUCCESS``), the rest absent: views and table dicts hold
+    the committed ones only, and the catalog lists the interrupted ones as
+    uncommitted without reading them."""
+    import os
+
+    from etdtransform_spark.api import (
+        catalog,
+        get_household_tables,
+        get_project_tables,
+        register_sql_views,
+    )
+    from etdtransform_spark.sources.parquet import family_path, write_family
+
+    out = str(tmp_path)
+    df = spark.createDataFrame(
+        [(1, 1, T0, 1.0)],
+        "HuisIdBSV long, ProjectIdBSV long, ReadingDate timestamp, v double",
+    )
+    write_family(df, out, "household_default")
+    write_family(df, out, "project", interval="60min")
+    for name, iv in [("household_calculated", None), ("avg_diffs", None),
+                     ("project", "24h")]:
+        os.makedirs(os.path.join(family_path(out, name, iv), "_temporary", "0"))
+
+    ivs = ["60min", "24h"]
+    assert register_sql_views(spark, out, intervals=ivs) == [
+        "household_default", "project_60min"
+    ]
+    assert set(get_household_tables(spark, out, intervals=ivs)) == {"default"}
+    assert set(get_project_tables(spark, out, intervals=ivs)) == {"60min"}
+    cat = {(r["family"], r["interval"]): r for r in catalog(spark, out).collect()}
+    assert set(cat) == {
+        ("household_default", None), ("project", "60min"),
+        ("household_calculated", None), ("avg_diffs", None), ("project", "24h"),
+    }
+    for key in [("household_default", None), ("project", "60min")]:
+        assert cat[key]["committed"] is True and cat[key]["n_columns"] == 4
+    for key in [("household_calculated", None), ("avg_diffs", None),
+                ("project", "24h")]:
+        assert cat[key]["committed"] is False, key
+        assert cat[key]["n_columns"] is None, key
+        assert cat[key]["n_files"] == 0 and cat[key]["size_bytes"] == 0, key
+
+
+def test_read_api_raises_on_unreadable_committed_family(spark, tmp_path):
+    """A committed family that cannot be read is an error, not a skip."""
+    import os
+
+    from etdtransform_spark.api import get_household_tables
+    from etdtransform_spark.sources.parquet import family_path
+
+    path = family_path(str(tmp_path), "household_default")
+    os.makedirs(path)
+    with open(os.path.join(path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    with pytest.raises(Exception):
+        get_household_tables(spark, str(tmp_path), intervals=["60min"])
+
+
 def test_register_sql_views(spark, pipeline_out):
     """The SQL façade exposes every materialized family as a temp view and
     spark.sql answers over them (reference read path served by Catalyst)."""
@@ -470,7 +559,7 @@ def test_catalog_lists_materialized_families(spark, pipeline_out):
     cat = {r["family"] if r["interval"] is None
            else f"{r['family']}_{r['interval']}": r
            for r in catalog(spark, out_dir).collect()}
-    assert "household_imputed" in cat and "project_60min" in cat
+    assert set(cat) == set(written)
     for r in cat.values():
         assert r["committed"] is True
         assert r["n_files"] >= 1 and r["size_bytes"] > 0

@@ -5,6 +5,7 @@ import hashlib
 
 import duckdb
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etdtransform_spark.functions.hashing import (
@@ -19,13 +20,7 @@ from etdtransform_spark.functions.scalars import (
     qround_sql,
     yyyymmdd_key,
 )
-from etdtransform_spark.operators.windows import (
-    forward_fill,
-    lag_diff,
-    ordered_window,
-    rolling_avg_min_periods,
-    top_k_flag,
-)
+from etdtransform_spark.operators.windows import rolling_avg_min_periods
 
 T0 = dt.datetime(2023, 1, 1, 0, 0, 0)
 
@@ -37,34 +32,15 @@ def _series(spark, vals):
     return spark.createDataFrame(rows, "hid long, ts timestamp, v double")
 
 
-def test_lag_diff_and_ffill(spark):
-    df = _series(spark, [1.0, 3.0, None, 7.0])
-    w = ordered_window(["hid"], ["ts"])
-    out = df.select(
-        lag_diff("v", w).alias("d"), forward_fill("v", w).alias("f")
-    ).collect()
-    assert [r["d"] for r in out] == [None, 2.0, None, None]
-    assert [r["f"] for r in out] == [1.0, 3.0, 3.0, 7.0]
-
-
 def test_rolling_avg_min_periods_gate(spark):
     df = _series(spark, [1.0, None, 3.0, 5.0])
-    w = ordered_window(["hid"], ["ts"])
+    w = Window.partitionBy("hid").orderBy("ts")
     out = df.select(
         rolling_avg_min_periods("v", w, window_rows=3, min_periods=2).alias("r")
     ).collect()
     # windows: [1]=1 non-null -> NULL; [1,NA]=1 -> NULL; [1,NA,3]=2 -> 2.0;
     # [NA,3,5]=2 -> 4.0
     assert [r["r"] for r in out] == [None, None, 2.0, 4.0]
-
-
-def test_top_k_flag(spark):
-    rows = [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 9.0)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = df.select("g", "v", top_k_flag(F.col("v"), ["g"], 2).alias("t")).collect()
-    got = {(r["g"], r["v"]): r["t"] for r in out}
-    assert got[("a", 1.0)] and got[("a", 2.0)] and not got[("a", 3.0)]
-    assert got[("b", 9.0)]
 
 
 def test_qround_matches_duckdb_on_boundary_values(spark):
